@@ -1198,7 +1198,9 @@ def knn_join_within_cells(
     Python boundary (the per-cell kernel) and no centroid collect at
     plan build — the serving posture every IVF deployment uses (the
     index is built once per corpus version at ingest). Default None
-    keeps the self-contained two-pass shape."""
+    keeps the self-contained two-pass shape. ``n_cells`` is unused when
+    ``assigned`` is given: the cells are whatever the relation carries,
+    so the caller checks that it was built with the intended count."""
     import numpy as np
     import pandas as pd
 

@@ -43,7 +43,7 @@ PRIORITY: tuple[str, ...] = (
     # window_moving_avg + whatever the cap cuts) leads the r16
     # rotation.
     #
-    # (a) plans changed by optimization r14/r15 (12):
+    # (a) plans changed by optimization r14/r15 (9):
     "pipeline_corpus_prep",          # r14: min_by tier-1 fold
     "search_mrr_audit",              # r14 floor-gates + r15 pair persist
     "search_docs_bm25",              # r14: tokcache build shape under it

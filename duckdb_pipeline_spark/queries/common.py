@@ -405,7 +405,7 @@ def maybe_persist(df: DataFrame, level=None, floor_bytes: int | None = None) -> 
                     "SPARK_GRAFT_PERSIST_FLOOR_BYTES", str(128 * 1024 * 1024)
                 )
             )
-        except (TypeError, ValueError):
+        except ValueError:
             floor_bytes = 128 * 1024 * 1024
     total = input_bytes(df)
     if total is not None and total < floor_bytes:

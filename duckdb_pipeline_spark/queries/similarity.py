@@ -1265,10 +1265,20 @@ def knn_join_topk_ivf(spark, sf_dir):
     embeddings, so the driver hash gate proves index == inline."""
     from ..operators.similarity import knn_join_within_cells
 
-    idx = _ensure_ivf_index(spark, sf_dir, n_cells=8)
+    n_cells = 8
+    idx = _ensure_ivf_index(spark, sf_dir, n_cells=n_cells)
+    # the kernel takes its cells from the index, not from n_cells: check
+    # the index's stamp (a local file read, no Spark job)
+    with open(os.path.join(idx, "_SRC.json")) as fh:
+        built = json.load(fh).get("n_cells")
+    if built != n_cells:
+        raise ValueError(
+            f"IVF index {idx} was built with n_cells={built}, "
+            f"query needs {n_cells}"
+        )
     return knn_join_within_cells(
         load(spark, sf_dir, "embeddings"),
-        n_cells=8,
+        n_cells=n_cells,
         k=3,
         assigned=spark.read.parquet(idx),
     )

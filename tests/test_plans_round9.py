@@ -4,7 +4,11 @@ through its Exchanges and must contain NO join operator anywhere (the
 block-nested-loop replaces the join); the IVF variant adds only the
 one cell-group Exchange."""
 
-from duckdb_pipeline_spark.queries import collect_all
+import json
+
+import pytest
+
+from duckdb_pipeline_spark.queries import collect_all, similarity
 from tests.test_plans import plan_text
 from tests.test_plans_round7 import _shuffle_exchanges
 
@@ -52,3 +56,15 @@ def test_knn_incremental_probe_scan_is_partition_pruned(spark, sf_dir):
     for op in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
                "CartesianProduct", "BroadcastNestedLoopJoin"):
         assert op not in plan, f"{op} leaked into the probe plan:\n{plan}"
+
+
+def test_knn_join_ivf_rejects_index_built_with_other_n_cells(tmp_path, monkeypatch):
+    """The per-cell kernel takes its cells from the index, so an index
+    stamped with another n_cells must fail before any Spark job runs;
+    no SparkSession is needed to reach the check."""
+    (tmp_path / "_SRC.json").write_text(json.dumps({"n_cells": 4}))
+    monkeypatch.setattr(
+        similarity, "_ensure_ivf_index", lambda spark, sf_dir, n_cells: str(tmp_path)
+    )
+    with pytest.raises(ValueError, match="n_cells=4"):
+        similarity.knn_join_topk_ivf(None, "unused")
