@@ -19,7 +19,12 @@ matching SQL.
 
 from __future__ import annotations
 
+import fcntl
+import hashlib
+import json
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -462,8 +467,8 @@ def invalidate_source(spark: SparkSession, sf_dir: str, name: str) -> None:
     (its analyzed plan pins the OLD file listing and schema), refresh
     Spark's file-status/FileIndex cache for the path, and clear
     CacheManager entries (persisted plans match by logical plan — same
-    path — and would silently serve the old content; ADVICE r10). The
-    `_ensure_*` builders call this on a stamp miss so a corpus-version
+    path — and would silently serve the old content; ADVICE r10).
+    `ensure_artifact` calls this on a stamp miss so a corpus-version
     change rebuilds from what is actually on disk. Across sessions none
     of these caches survive and this is a no-op."""
     cache = getattr(spark, "_dps_load_cache", None)
@@ -475,6 +480,167 @@ def invalidate_source(spark: SparkSession, sf_dir: str, name: str) -> None:
         pass  # path may not have been read yet this session
     spark.catalog.clearCache()
 
+
+
+# ------------------------------------------------------ at-rest artifacts
+
+
+def _repo_root() -> str:
+    return os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def scratch_dir(kind: str, sf_dir: str) -> str:
+    """``.scratch/<kind>/<basename>-<sha12>`` for a corpus dir. The
+    label hashes the ABSOLUTE sf_dir: two scale dirs sharing a basename
+    under different roots must not share an artifact (round-5 ADVICE)."""
+    absd = os.path.abspath(sf_dir)
+    label = (
+        f"{os.path.basename(os.path.normpath(absd)) or 'sf'}-"
+        f"{hashlib.sha256(absd.encode()).hexdigest()[:12]}"
+    )
+    return os.path.join(_repo_root(), ".scratch", kind, label)
+
+
+_STAMP = "_SRC.json"
+
+
+def _source_parts(src: str) -> list[tuple[str, str]]:
+    """(name, file) for each data file of a parquet source: the file
+    itself, or a directory's sorted part files (``_``/``.`` entries are
+    commit metadata, not data)."""
+    if not os.path.isdir(src):
+        return [(os.path.basename(src), src)]
+    parts = []
+    for root, dirs, files in os.walk(src):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for f in files:
+            if not f.startswith(("_", ".")):
+                full = os.path.join(root, f)
+                parts.append((os.path.relpath(full, src), full))
+    return sorted(parts)
+
+
+def _read_stamp(path: str) -> dict | None:
+    try:
+        with open(os.path.join(path, _STAMP)) as fh:
+            stamp = json.load(fh)
+    except (OSError, ValueError):
+        return None
+    return stamp if isinstance(stamp, dict) else None
+
+
+def _write_stamp(path: str, stamp: dict) -> None:
+    tmp = os.path.join(path, _STAMP + ".tmp")
+    with open(tmp, "w") as fh:
+        json.dump(stamp, fh)
+    os.replace(tmp, os.path.join(path, _STAMP))
+
+
+def ensure_artifact(
+    spark, path: str, sf_dir: str, source: str, params: dict, build
+) -> bool:
+    """Keep the at-rest artifact at ``path`` (an index or layout derived
+    from ``{sf_dir}/{source}.parquet``) built for the source's current
+    bytes and ``params`` (JSON values); returns whether it built.
+
+    Hit: one ``os.stat`` pass over the source plus one read of
+    ``<path>/_SRC.json`` — no lock, no Spark job. The stat key covers
+    size, mtime, ctime and inode of every part file, so any write to the
+    source moves it (an in-place rewrite that restores its mtime still
+    moves ctime). A moved key falls back to sha256 over part names and
+    bytes: same bytes only refresh the stamp.
+
+    Miss: under an exclusive ``flock`` on the sibling ``_lock_<name>``,
+    restore a swap interrupted between its renames, re-check (another
+    caller may have built meanwhile), clear the session caches derived
+    from the source, then ``build(staging)`` into a fresh ``_build_*``
+    sibling, write the stamp last, and swap staging in for ``path``
+    (`sinks._swap_dir`). A build that raises leaves the previous
+    artifact and its stamp untouched. Stamp keys not in ``params`` (a
+    caller's own bookkeeping) are ignored when comparing."""
+    from ..sinks import _recover_dir, _swap_dir
+
+    src = os.path.join(sf_dir, f"{source}.parquet")
+    parts = _source_parts(src)
+    key = []
+    for rel, f in parts:
+        st = os.stat(f)
+        key.append([rel, st.st_size, st.st_mtime_ns, st.st_ctime_ns, st.st_ino])
+
+    def same_params(stamp) -> bool:
+        return stamp is not None and all(stamp.get(k) == v for k, v in params.items())
+
+    stamp = _read_stamp(path)
+    if same_params(stamp) and stamp.get("stat") == key:
+        return False
+    parent, name = os.path.split(os.path.abspath(path))
+    os.makedirs(parent, exist_ok=True)
+    with open(os.path.join(parent, f"_lock_{name}"), "a") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)  # released when the file closes
+        # only under the lock: a swap in progress elsewhere would
+        # otherwise look interrupted and be "restored" into its path
+        _recover_dir(path)
+        stamp = _read_stamp(path)
+        if same_params(stamp) and stamp.get("stat") == key:
+            return False
+        h = hashlib.sha256()
+        for rel, f in parts:
+            h.update(rel.encode())
+            with open(f, "rb") as fh:
+                for chunk in iter(lambda: fh.read(1 << 20), b""):
+                    h.update(chunk)
+        digest = h.hexdigest()
+        if same_params(stamp) and stamp.get("sha256") == digest:
+            _write_stamp(path, {**stamp, "stat": key})
+            return False
+        invalidate_source(spark, sf_dir, source)
+        staging = tempfile.mkdtemp(prefix="_build_", dir=parent)
+        try:
+            build(staging)
+            _write_stamp(staging, {**params, "stat": key, "sha256": digest})
+            _swap_dir(staging, path)
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
+    return True
+
+
+def ensure_bucketed_table(
+    spark, tname: str, path: str, sf_dir: str, source: str, params: dict, derive
+) -> str:
+    """`ensure_artifact` for a bucketed catalog table: ``derive()`` is
+    written ``bucketBy(params["n_buckets"], params["key"])
+    sortBy(*params["sort"])`` at the staging path, and the external
+    table ``tname`` is (re-)registered over ``path`` after a build and
+    whenever this session's catalog has no such table."""
+    n, key, sort = params["n_buckets"], params["key"], params["sort"]
+
+    def build(staging: str) -> None:
+        tmp = f"{tname}_build"
+        spark.sql(f"DROP TABLE IF EXISTS {tmp}")
+        (
+            derive()
+            .write.bucketBy(n, key)
+            .sortBy(*sort)
+            .option("path", staging)
+            .mode("overwrite")
+            .saveAsTable(tmp)
+        )
+        spark.sql(f"DROP TABLE {tmp}")  # external: the files stay
+
+    built = ensure_artifact(spark, path, sf_dir, source, params, build)
+    if built or not spark.catalog.tableExists(tname):
+        spark.sql(f"DROP TABLE IF EXISTS {tname}")
+        ddl = ", ".join(
+            f"`{f.name}` {f.dataType.simpleString()}"
+            for f in spark.read.parquet(path).schema.fields
+        )
+        spark.sql(
+            f"CREATE TABLE {tname} ({ddl}) USING PARQUET "
+            f"CLUSTERED BY ({key}) SORTED BY ({', '.join(sort)}) "
+            f"INTO {n} BUCKETS LOCATION '{path}'"
+        )
+    return tname
 
 def twin_shift(
     spark: SparkSession,

@@ -22,7 +22,7 @@ from ..operators.dedup import (
     simhash_fingerprints_mapped,
 )
 from . import QuerySpec
-from .common import load, twin_shift
+from .common import _repo_root, ensure_artifact, load, scratch_dir, twin_shift
 
 ID_SHIFT = 1_000_000
 
@@ -456,58 +456,24 @@ def dedup_components_star(spark, sf_dir):
 def _ensure_component_labels(spark, sf_dir: str) -> str:
     """Persisted component labels of the OLD corpus slice (doc_id % 10
     != 0) — `dedup_components_incremental`'s prior state, computed once
-    per corpus version (the `_ensure_band_index` stamp pattern:
-    size+mtime keyed, scheme-versioned, absolute-dir-hashed path). LSH
-    collisions and pair verification are strictly pairwise, so
-    components over the old slice alone equal the old-old restriction
-    of the full-corpus pair graph."""
-    import hashlib
-    import json
-    import os
-
+    per corpus version (`common.ensure_artifact`; "scheme" versions the
+    signature family). LSH collisions and pair verification are
+    strictly pairwise, so components over the old slice alone equal the
+    old-old restriction of the full-corpus pair graph."""
     from ..operators.dedup import connected_components_star
 
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    absd = os.path.abspath(sf_dir)
-    label = (
-        f"{os.path.basename(os.path.normpath(absd)) or 'sf'}-"
-        f"{hashlib.sha256(absd.encode()).hexdigest()[:12]}"
-    )
-    path = os.path.join(repo, ".scratch", "cclabels", label)
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    stamp = {
-        "size": st.st_size,
-        "mtime_ns": st.st_mtime_ns,
-        "scheme": "cw-md5le-v2-star",
-    }
-    marker = os.path.join(path, "_SRC.json")
-    try:
-        with open(marker) as fh:
-            if json.load(fh) == stamp:
-                return path
-    except (OSError, ValueError):
-        pass
-    # Stamp miss = the source parquet changed (or first build). Within
-    # one Spark session, CacheManager matches persisted band/shingle
-    # plans by LOGICAL PLAN — same path — and the memoized `load`
-    # relation pins the OLD file listing; a same-session source rewrite
-    # would silently rebuild from the old corpus. Invalidate everything
-    # derived from the path before rebuilding so the builder is
-    # self-contained (ADVICE r10; previously only the test worked
-    # around this). Misses are once-per-corpus-version, so the global
-    # clear costs re-derivation other queries would pay anyway after a
-    # corpus change.
-    from .common import invalidate_source
+    path = scratch_dir("cclabels", sf_dir)
 
-    invalidate_source(spark, sf_dir, "documents")
-    old_docs = _dup_corpus(spark, sf_dir).where(
-        F.pmod(F.col("doc_id"), F.lit(10)) != 0
+    def build(staging: str) -> None:
+        old_docs = _dup_corpus(spark, sf_dir).where(
+            F.pmod(F.col("doc_id"), F.lit(10)) != 0
+        )
+        cc = connected_components_star(minhash_lsh_dedup_mapped(old_docs))
+        cc.write.mode("overwrite").parquet(staging)
+
+    ensure_artifact(
+        spark, path, sf_dir, "documents", {"scheme": "cw-md5le-v2-star"}, build
     )
-    cc = connected_components_star(minhash_lsh_dedup_mapped(old_docs))
-    cc.write.mode("overwrite").parquet(path)  # clears any stale marker
-    with open(marker, "w") as fh:
-        json.dump(stamp, fh)
     return path
 
 
@@ -1133,55 +1099,20 @@ WHERE CAST(ni AS DOUBLE) / z.n_eval >= 0.2
 
 
 def _ensure_band_index(spark, sf_dir: str) -> str:
-    """Build (once per corpus version) the persisted MinHash band index
-    over the 'already-ingested' batch (doc_id % 4 != 0). Staleness is
-    keyed on the source parquet's content (size + sha256) — the round
-    driver regenerates testdata between rounds, and a regeneration
-    preserving size and mtime must still invalidate. The cache
-    directory includes a
-    hash of the ABSOLUTE sf_dir (not just its basename): two scale dirs
-    with the same basename under different roots must not share a cache
-    path (round-5 ADVICE on the IVF cache)."""
-    import hashlib
-    import json
-    import os
-
+    """Build (once per corpus version, `common.ensure_artifact`) the
+    persisted MinHash band index over the 'already-ingested' batch
+    (doc_id % 4 != 0). "scheme" versions the signature family, so a
+    hash-scheme change rebuilds the index instead of silently probing
+    stale signatures."""
     from ..operators.dedup import minhash_band_index_write
 
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    absd = os.path.abspath(sf_dir)
-    label = (
-        f"{os.path.basename(os.path.normpath(absd)) or 'sf'}-"
-        f"{hashlib.sha256(absd.encode()).hexdigest()[:12]}"
-    )
-    path = os.path.join(repo, ".scratch", "bandidx", label)
-    src = os.path.join(sf_dir, "documents.parquet")
-    # (size, mtime) staleness fast path (no per-call content hash —
-    # the bucketed-layout precedent, ADVICE r7); "scheme" versions the
-    # signature family so a hash-scheme change rebuilds the index
-    # instead of silently probing stale signatures.
-    st = os.stat(src)
-    stamp = {
-        "size": st.st_size,
-        "mtime_ns": st.st_mtime_ns,
-        "scheme": "cw-md5le-v2",
-    }
-    marker = os.path.join(path, "_SRC.json")
-    try:
-        with open(marker) as fh:
-            if json.load(fh) == stamp:
-                return path
-    except (OSError, ValueError):
-        pass
-    # stamp miss: see _ensure_component_labels — invalidate every
-    # session cache derived from the source path before rebuilding
-    from .common import invalidate_source
+    path = scratch_dir("bandidx", sf_dir)
 
-    invalidate_source(spark, sf_dir, "documents")
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    minhash_band_index_write(docs.where(F.col("doc_id") % 4 != 0), path)
-    with open(marker, "w") as fh:
-        json.dump(stamp, fh)
+    def build(staging: str) -> None:
+        docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+        minhash_band_index_write(docs.where(F.col("doc_id") % 4 != 0), staging)
+
+    ensure_artifact(spark, path, sf_dir, "documents", {"scheme": "cw-md5le-v2"}, build)
     return path
 
 
@@ -1324,7 +1255,6 @@ def band_index_append_equals_rebuild(spark, sf_dir):
         minhash_band_index_write,
     )
 
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     sh_ = _shift(spark, sf_dir)
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     base = docs.where(F.col("doc_id") % 4 != 0)
@@ -1341,7 +1271,7 @@ def band_index_append_equals_rebuild(spark, sf_dir):
         .unionByName(slice_shifted(10, 1, 14))
     )
     label = hashlib.sha256(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    idx = os.path.join(repo, ".scratch", "bandidx_append_q", label)
+    idx = os.path.join(_repo_root(), ".scratch", "bandidx_append_q", label)
     # fresh epoch per run: the protocol is build + append + append
     shutil.rmtree(idx, ignore_errors=True)
     minhash_band_index_write(base, idx)

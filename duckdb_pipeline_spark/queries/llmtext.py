@@ -1062,7 +1062,8 @@ def vocab_top_tokens_unicode(spark, sf_dir):
     import hashlib
     import os
 
-    from .tokcache import _repo_root, doc_tf
+    from .common import _repo_root
+    from .tokcache import doc_tf
 
     docs = load(spark, sf_dir, "documents")
     ush = twin_shift(spark, sf_dir, floor=_U_SHIFT)

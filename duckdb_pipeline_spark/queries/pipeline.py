@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from . import QuerySpec
-from .common import load
+from .common import ensure_artifact, load, scratch_dir
 
 
 def clean_events(spark, sf_dir):
@@ -109,45 +109,12 @@ QUERIES = {
 # ---------------------------------------------------------------------------
 
 
-def _ensure_versioned_customers(spark, sf_dir: str) -> str:
-    """Build (once per source content) a 2-version customer table with
-    `sinks.write_version`: v1 = the customer snapshot (balance in exact
-    cents), v2 = deletes (c_custkey % 97 == 0), updates (BUILDING
-    segment +1000 cents) and inserts (% 101 == 0 re-keyed +1,000,000).
-    Both versions derive deterministically from the customer view, so
-    the CDC diff AND the pinned time-travel read are plain SQL over
-    `customer` — the oracle never reads the versioned dir. Staleness
-    stamp (size+sha256 of customer.parquet) rebuilds the table whenever
-    the driver regenerates testdata."""
-    import hashlib
-    import json
-    import os
-    import shutil
-
-    from ..sinks import write_version
-
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    absd = os.path.abspath(sf_dir)
-    label = (
-        f"{os.path.basename(os.path.normpath(absd)) or 'sf'}-"
-        f"{hashlib.sha256(absd.encode()).hexdigest()[:12]}"
-    )
-    root = os.path.join(repo, ".scratch", "versioned_cust", label)
-    src = os.path.join(sf_dir, "customer.parquet")
-    h = hashlib.sha256()
-    with open(src, "rb") as fh:
-        for chunk in iter(lambda: fh.read(1 << 20), b""):
-            h.update(chunk)
-    stamp = {"size": os.path.getsize(src), "sha256": h.hexdigest(), "v": 1}
-    marker = os.path.join(root, "_STAMP.json")
-    try:
-        with open(marker) as fh:
-            if json.load(fh) == stamp:
-                return root
-    except (OSError, ValueError):
-        pass
-    shutil.rmtree(root, ignore_errors=True)
-
+def _customer_versions(spark, sf_dir: str):
+    """(v1, v2) of the versioned customer table, both derived from the
+    customer view (the `_V1_SQL`/`_V2_SQL` oracle text): v1 = the
+    snapshot with balance in exact cents; v2 = deletes (c_custkey % 97
+    == 0), updates (BUILDING segment +1000 cents) and inserts (% 101 ==
+    0 re-keyed +1,000,000)."""
     cust = load(spark, sf_dir, "customer")
     v1 = cust.select(
         "c_custkey",
@@ -171,10 +138,25 @@ def _ensure_versioned_customers(spark, sf_dir: str) -> str:
             )
         )
     )
-    assert write_version(v1, root) == 1
-    assert write_version(v2, root) == 2
-    with open(marker, "w") as fh:
-        json.dump(stamp, fh)
+    return v1, v2
+
+
+def _ensure_versioned_customers(spark, sf_dir: str) -> str:
+    """Build (once per source content, `common.ensure_artifact`) a
+    2-version customer table with `sinks.write_version` from
+    `_customer_versions`. Both versions derive deterministically from
+    the customer view, so the CDC diff AND the pinned time-travel read
+    are plain SQL over `customer` — the oracle never reads the
+    versioned dir."""
+    from ..sinks import write_version
+
+    root = scratch_dir("versioned_cust", sf_dir)
+
+    def build(staging: str) -> None:
+        for v in _customer_versions(spark, sf_dir):
+            write_version(v, staging)  # fresh staging: versions 1, 2
+
+    ensure_artifact(spark, root, sf_dir, "customer", {"v": 1}, build)
     return root
 
 
@@ -438,69 +420,19 @@ def _ensure_vacuumed_customers(spark, sf_dir: str) -> str:
     c_custkey % 3 == 0), vacuumed to keep=2 — so version 1 is pruned.
     Separate root from `_ensure_versioned_customers` because vacuum
     MUTATES table state and the CDC/time-travel queries need their v1.
-    Built + vacuumed once per source content (same stamp contract), so
-    the audit query below is a pure READ and re-runs idempotently."""
-    import hashlib
-    import json
-    import os
-    import shutil
-
+    Built + vacuumed once per source content (`common.ensure_artifact`),
+    so the audit query below is a pure READ and re-runs idempotently."""
     from ..sinks import vacuum_versions, write_version
 
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    absd = os.path.abspath(sf_dir)
-    label = (
-        f"{os.path.basename(os.path.normpath(absd)) or 'sf'}-"
-        f"{hashlib.sha256(absd.encode()).hexdigest()[:12]}"
-    )
-    root = os.path.join(repo, ".scratch", "versioned_cust_vac", label)
-    src = os.path.join(sf_dir, "customer.parquet")
-    h = hashlib.sha256()
-    with open(src, "rb") as fh:
-        for chunk in iter(lambda: fh.read(1 << 20), b""):
-            h.update(chunk)
-    stamp = {"size": os.path.getsize(src), "sha256": h.hexdigest(), "v": 1}
-    marker = os.path.join(root, "_STAMP.json")
-    try:
-        with open(marker) as fh:
-            if json.load(fh) == stamp:
-                return root
-    except (OSError, ValueError):
-        pass
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("versioned_cust_vac", sf_dir)
 
-    # same v1/v2 derivations as _ensure_versioned_customers (shared
-    # _V1_SQL/_V2_SQL oracle text), plus v3
-    cust = load(spark, sf_dir, "customer")
-    v1 = cust.select(
-        "c_custkey",
-        "c_mktsegment",
-        F.floor(F.col("c_acctbal") * 100 + F.lit(0.5)).cast("long").alias("bal_cents"),
-    )
-    v2 = (
-        v1.where(F.col("c_custkey") % 97 != 0)
-        .withColumn(
-            "bal_cents",
-            F.col("bal_cents")
-            + F.when(F.col("c_mktsegment") == "BUILDING", F.lit(1000)).otherwise(
-                F.lit(0)
-            ),
-        )
-        .unionByName(
-            cust.where(F.col("c_custkey") % 101 == 0).select(
-                (F.col("c_custkey") + F.lit(1_000_000)).alias("c_custkey"),
-                F.lit("NEWSEG").alias("c_mktsegment"),
-                F.col("c_custkey").cast("long").alias("bal_cents"),
-            )
-        )
-    )
-    v3 = v2.where(F.col("c_custkey") % 3 != 0)
-    assert write_version(v1, root) == 1
-    assert write_version(v2, root) == 2
-    assert write_version(v3, root) == 3
-    assert vacuum_versions(root, keep=2) == [1]
-    with open(marker, "w") as fh:
-        json.dump(stamp, fh)
+    def build(staging: str) -> None:
+        v1, v2 = _customer_versions(spark, sf_dir)
+        for v in (v1, v2, v2.where(F.col("c_custkey") % 3 != 0)):
+            write_version(v, staging)  # fresh staging: versions 1, 2, 3
+        vacuum_versions(staging, keep=2)  # prunes version 1
+
+    ensure_artifact(spark, root, sf_dir, "customer", {"v": 1}, build)
     return root
 
 

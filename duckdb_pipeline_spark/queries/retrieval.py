@@ -184,8 +184,8 @@ def search_docs_bm25_unicode(spark, sf_dir):
     import hashlib
     import os
 
-    from .common import twin_shift
-    from .tokcache import _repo_root, doc_tf
+    from .common import _repo_root, twin_shift
+    from .tokcache import doc_tf
 
     docs = load(spark, sf_dir, "documents")
     ush = twin_shift(spark, sf_dir, floor=_U_BM25_SHIFT)

@@ -20,7 +20,7 @@ from ..operators.similarity import (
     lsh_topk_vectorized,
 )
 from . import QuerySpec
-from .common import load
+from .common import ensure_artifact, load, scratch_dir
 
 S = 1_000_000_000
 
@@ -152,45 +152,19 @@ LSH_TOPK_SQL = _lsh_sql(n_bits=4)
 
 
 def _ensure_ivf_index(spark, sf_dir: str, n_cells: int) -> str:
-    """Build (once) the cell-partitioned IVF index for this corpus
-    version. The cache directory includes a hash of the ABSOLUTE
-    sf_dir — basename alone would let two scale dirs with the same
-    basename under different roots share a path and thrash rebuilds
-    (round-5 ADVICE). Staleness is keyed on the source parquet's
-    CONTENT (size + sha256), not mtime: the round driver regenerates
-    testdata between rounds, and a regeneration that preserves size and
-    mtime must still invalidate. The build is the index-construction
-    pass every IVF deployment runs at ingest; the ANN query itself then
-    partition-prunes."""
-    import hashlib
-
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    absd = os.path.abspath(sf_dir)
-    label = (
-        f"{os.path.basename(os.path.normpath(absd)) or 'sf'}-"
-        f"{hashlib.sha256(absd.encode()).hexdigest()[:12]}"
+    """Build (once per corpus version) the cell-partitioned IVF index
+    under ``.scratch/ivf/<basename>-<sha12>`` (`common.ensure_artifact`
+    holds the staleness contract; ``n_cells`` is recorded in the stamp,
+    which `knn_join_topk_ivf` reads). The build is the
+    index-construction pass every IVF deployment runs at ingest; the
+    ANN query itself then partition-prunes."""
+    path = scratch_dir("ivf", sf_dir)
+    ensure_artifact(
+        spark, path, sf_dir, "embeddings", {"n_cells": n_cells},
+        lambda staging: ivf_write_index(
+            load(spark, sf_dir, "embeddings"), staging, n_cells=n_cells
+        ),
     )
-    path = os.path.join(repo, ".scratch", "ivf", label)
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    h = hashlib.sha256()
-    with open(src, "rb") as fh:
-        for chunk in iter(lambda: fh.read(1 << 20), b""):
-            h.update(chunk)
-    stamp = {
-        "size": os.path.getsize(src),
-        "sha256": h.hexdigest(),
-        "n_cells": n_cells,
-    }
-    marker = os.path.join(path, "_SRC.json")
-    try:
-        with open(marker) as fh:
-            if json.load(fh) == stamp:
-                return path
-    except (OSError, ValueError):
-        pass
-    ivf_write_index(load(spark, sf_dir, "embeddings"), path, n_cells=n_cells)
-    with open(marker, "w") as fh:
-        json.dump(stamp, fh)
     return path
 
 
@@ -1416,44 +1390,35 @@ FROM m
 """
 
 
-def _ensure_probe_index(spark, sf_dir: str, n_cells: int = 8) -> str:
+_PROBE_CELLS = 8
+
+
+def _ensure_probe_index(spark, sf_dir: str) -> str:
     """Persisted IVF index over the 'already-ingested' corpus slice
-    (vec_id % 20 != 0) for the incremental probe — the band-index
-    ensure pattern: (size, mtime) stamp + scheme version; absolute-dir
-    hash in the label."""
-    import hashlib
-    import json
+    (vec_id % 20 != 0) for the incremental probe, built once per
+    corpus version through `common.ensure_artifact`."""
+    path = scratch_dir("ivfprobe", sf_dir)
 
-    from ..operators.similarity import ivf_write_index
+    def build(staging: str) -> None:
+        import numpy as np
 
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    absd = os.path.abspath(sf_dir)
-    label = (
-        f"{os.path.basename(os.path.normpath(absd)) or 'sf'}-"
-        f"{hashlib.sha256(absd.encode()).hexdigest()[:12]}"
+        emb = load(spark, sf_dir, "embeddings").where(F.col("vec_id") % 20 != 0)
+        # subset ids are not dense from 0: centroids = the slice's own
+        # lowest-id vectors (bounded _PROBE_CELLS-row collect; knn_probe_index
+        # re-reads the same rows from the index at probe time)
+        crows = (
+            emb.select("vec_id", "embedding")
+            .orderBy("vec_id")
+            .limit(_PROBE_CELLS)
+            .collect()
+        )
+        C = np.stack([np.asarray(r["embedding"], dtype="float64") for r in crows])
+        ivf_write_index(emb, staging, n_cells=_PROBE_CELLS, centroids=C)
+
+    ensure_artifact(
+        spark, path, sf_dir, "embeddings",
+        {"scheme": "ivf-fp-v1", "n_cells": _PROBE_CELLS}, build,
     )
-    path = os.path.join(repo, ".scratch", "ivfprobe", label)
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    stamp = {"size": st.st_size, "mtime_ns": st.st_mtime_ns, "scheme": "ivf-fp-v1"}
-    marker = os.path.join(path, "_SRC.json")
-    try:
-        with open(marker) as fh:
-            if json.load(fh) == stamp:
-                return path
-    except (OSError, ValueError):
-        pass
-    emb = load(spark, sf_dir, "embeddings").where(F.col("vec_id") % 20 != 0)
-    # subset ids are not dense from 0: centroids = the slice's own
-    # lowest-id vectors (bounded n_cells-row collect; knn_probe_index
-    # re-reads the same rows from the index at probe time)
-    import numpy as np
-
-    crows = emb.select("vec_id", "embedding").orderBy("vec_id").limit(n_cells).collect()
-    C = np.stack([np.asarray(r["embedding"], dtype="float64") for r in crows])
-    ivf_write_index(emb, path, n_cells=n_cells, centroids=C)
-    with open(marker, "w") as fh:
-        json.dump(stamp, fh)
     return path
 
 
@@ -1468,9 +1433,9 @@ def knn_incremental_probe(spark, sf_dir):
     the already-indexed corpus, without rescanning it."""
     from ..operators.similarity import knn_probe_index
 
-    idx = _ensure_probe_index(spark, sf_dir, n_cells=8)
+    idx = _ensure_probe_index(spark, sf_dir)
     batch = load(spark, sf_dir, "embeddings").where(F.col("vec_id") % 20 == 0)
-    return knn_probe_index(spark, idx, batch, k=3, n_cells=8, n_probe=2)
+    return knn_probe_index(spark, idx, batch, k=3, n_cells=_PROBE_CELLS, n_probe=2)
 
 
 KNN_PROBE_SQL = f"""
@@ -2325,66 +2290,46 @@ QUERIES.update(
 
 
 def _ensure_ivfpq_index(spark, sf_dir: str) -> str:
-    """Build (once) the PERSISTED IVF-PQ index — the FAISS index file,
-    as a lakehouse table: PQ codebooks train once (R=1, the
-    similarity_pq_adc_topk recipe), every vector stores ONLY its cell
-    assignment and M uint8 codes (16x compression: 4 codes vs 64
-    floats), partitioned by cell. Codebooks land beside the data as
-    JSON so serving never retrains or touches the raw vectors.
-    Same content-hash staleness stamp as `_ensure_ivf_index`."""
-    import hashlib
-
+    """Build (once per corpus version, `common.ensure_artifact`) the
+    PERSISTED IVF-PQ index — the FAISS index file, as a lakehouse
+    table: PQ codebooks train once (R=1, the similarity_pq_adc_topk
+    recipe), every vector stores ONLY its cell assignment and M uint8
+    codes (16x compression: 4 codes vs 64 floats), partitioned by cell.
+    Codebooks land beside the data as JSON so serving never retrains or
+    touches the raw vectors. An index that has absorbed appended
+    batches (`ivfpq_append_batch`) no longer equals the pure-corpus
+    encode this query's shared oracle computes: its stamp is dropped so
+    the call rebuilds instead of serving it."""
     import numpy as np
 
-    from ..operators.similarity import SCALE as _SC
-    from ..operators.similarity import (
-        _ivf_centroids_and_query,
-        pq_train_partials,
-    )
+    from ..operators.similarity import _ivf_centroids_and_query, pq_train_partials
 
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    absd = os.path.abspath(sf_dir)
-    label = (
-        f"{os.path.basename(os.path.normpath(absd)) or 'sf'}-"
-        f"{hashlib.sha256(absd.encode()).hexdigest()[:12]}"
-    )
-    path = os.path.join(repo, ".scratch", "ivfpq", label)
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    h = hashlib.sha256()
-    with open(src, "rb") as fh:
-        for chunk in iter(lambda: fh.read(1 << 20), b""):
-            h.update(chunk)
-    stamp = {"size": os.path.getsize(src), "sha256": h.hexdigest(), "v": 2}
-    marker = os.path.join(path, "_SRC.json")
-    try:
-        with open(marker) as fh:
-            if json.load(fh) == stamp and not _ivfpq_applied_batches(path):
-                # an index that has absorbed appended batches no longer
-                # equals the pure-corpus encode this query's shared
-                # oracle computes — rebuild rather than serve it stale
-                return path
-    except (OSError, ValueError):
-        pass
+    path = scratch_dir("ivfpq", sf_dir)
+    if _ivfpq_applied_batches(path):
+        try:
+            os.remove(os.path.join(path, "_SRC.json"))
+        except FileNotFoundError:
+            pass
 
-    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    CB = _pq_seed_codebooks(emb)
-    rows = (
-        pq_train_partials(emb, CB)
-        .groupBy("m", "code", "i")
-        .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-        .collect()
-    )
-    CB1 = _pq_apply_update(CB, rows)
-    C, _ = _ivf_centroids_and_query(emb, 0, 8, "vec_id", "embedding")
+    def build(staging: str) -> None:
+        emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        CB = _pq_seed_codebooks(emb)
+        rows = (
+            pq_train_partials(emb, CB)
+            .groupBy("m", "code", "i")
+            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
+            .collect()
+        )
+        CB1 = _pq_apply_update(CB, rows)
+        C, _ = _ivf_centroids_and_query(emb, 0, 8, "vec_id", "embedding")
+        coded = _ivfpq_encode(emb, CB1, C)
+        coded.write.mode("overwrite").partitionBy("cell").parquet(staging)
+        with open(os.path.join(staging, "_CODEBOOKS.json"), "w") as fh:
+            json.dump(CB1.tolist(), fh)
+        with open(os.path.join(staging, "_CENTROIDS.json"), "w") as fh:
+            json.dump(np.asarray(C, dtype="float64").tolist(), fh)
 
-    coded = _ivfpq_encode(emb, CB1, C)
-    coded.write.mode("overwrite").partitionBy("cell").parquet(path)
-    with open(os.path.join(path, "_CODEBOOKS.json"), "w") as fh:
-        json.dump(CB1.tolist(), fh)
-    with open(os.path.join(path, "_CENTROIDS.json"), "w") as fh:
-        json.dump(np.asarray(C, dtype="float64").tolist(), fh)
-    with open(marker, "w") as fh:
-        json.dump(stamp, fh)
+    ensure_artifact(spark, path, sf_dir, "embeddings", {"v": 2}, build)
     return path
 
 

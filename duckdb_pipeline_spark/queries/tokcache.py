@@ -22,11 +22,11 @@ adds a second tier, `tokenizer="unicode"` (casefold + maximal
 [\\p{L}\\p{N}]+ runs), materialized as its OWN bucketed table — see
 the tokenizer registry below.
 
-Staleness follows the band-index/bucketed-layout contract: (size,
-mtime) fast path, sha256 slow path, absolute-dir-hashed cache location;
-a stamp miss clears session caches before rebuilding (same-session
-source rewrites must not reuse CacheManager-matched plans — ADVICE
-r10). Reference parity note: the reference has no materialized token
+Staleness is `common.ensure_artifact`'s contract (stat fast path,
+sha256 slow path, absolute-dir-hashed location, session caches cleared
+and a staged build swapped in on a miss); `append_doc_tf` bumps an
+``appends`` counter in the same stamp, which the staleness check
+ignores. Reference parity note: the reference has no materialized token
 store; this is an at-rest layout choice on the Spark side, and every
 consumer's DuckDB oracle still derives tf inline from raw text, so the
 correctness gate covers the full derivation.
@@ -40,7 +40,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from .common import load
+from .common import _repo_root, ensure_bucketed_table, load
 
 _N_BUCKETS = 32  # parallelism ceiling of the bucketed scan; see
 # queries/bucketed.py:_N_BUCKETS for the measured rationale
@@ -76,10 +76,6 @@ def _tokens_expr(tokenizer: str):
     raise ValueError(f"unknown tokenizer {tokenizer!r} (use 'space' or 'unicode')")
 
 
-def _repo_root() -> str:
-    return os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
 def cache_location(sf_dir: str, tokenizer: str = "space") -> tuple[str, str, str]:
     """(table_name, data_dir, marker_path) for a corpus dir + tier —
     the single source of truth for the projection's scratch layout
@@ -98,73 +94,13 @@ def cache_location(sf_dir: str, tokenizer: str = "space") -> tuple[str, str, str
     return f"toktf_{label}", path, os.path.join(path, "_SRC.json")
 
 
-def _ddl(schema) -> str:
-    return ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
-
-
 def _ensure_doc_tf(spark, sf_dir: str, tokenizer: str = "space") -> str:
     """Materialize (once per corpus version and tokenizer tier) the
     (doc_id, token, tf) projection of `documents` as a bucketed(doc_id)
     catalog table; returns the table name."""
-    tname, path, marker = cache_location(sf_dir, tokenizer)
-    src = os.path.join(sf_dir, "documents.parquet")
+    tname, path, _ = cache_location(sf_dir, tokenizer)
 
-    # `documents.parquet` is a single file in the driver's testdata but
-    # a parquet DIRECTORY when written by Spark (tests, downstream
-    # lakes) — stamp over the sorted data-file list either way
-    def _parts(p: str) -> list[str]:
-        if os.path.isdir(p):
-            return sorted(
-                os.path.join(r, f)
-                for r, _, fs in os.walk(p)
-                for f in fs
-                if not f.startswith(("_", "."))
-            )
-        return [p]
-
-    parts = _parts(src)
-    sizes = [os.stat(f) for f in parts]
-    size = sum(s.st_size for s in sizes)
-    mtime_ns = max((s.st_mtime_ns for s in sizes), default=0)
-    spec = {"n_buckets": _N_BUCKETS, "key": "doc_id", "scheme": _SCHEMES[tokenizer]}
-    old = None
-    try:
-        with open(marker) as fh:
-            old = json.load(fh)
-    except (OSError, ValueError):
-        pass
-
-    def _content_hash() -> str:
-        h = hashlib.sha256()
-        for f in parts:
-            h.update(os.path.basename(f).encode())
-            with open(f, "rb") as fh:
-                for chunk in iter(lambda: fh.read(1 << 20), b""):
-                    h.update(chunk)
-        return h.hexdigest()
-
-    fresh = False
-    digest = None
-    if old is not None and {k: old.get(k) for k in spec} == spec:
-        if old.get("size") == size and old.get("mtime_ns") == mtime_ns:
-            fresh = True
-        elif old.get("size") == size:
-            digest = _content_hash()
-            if old.get("sha256") == digest:
-                fresh = True  # same bytes, touched file: refresh marker
-                with open(marker, "w") as fh:
-                    json.dump({**old, "mtime_ns": mtime_ns}, fh)
-    if digest is None and not fresh:
-        digest = _content_hash()
-
-    if not fresh:
-        # stamp miss: the source changed (or first build) — invalidate
-        # every session cache derived from the path (memoized load,
-        # FileIndex listing, CacheManager plans) so the rebuild reads
-        # what is on disk (ADVICE r10)
-        from .common import invalidate_source
-
-        invalidate_source(spark, sf_dir, "documents")
+    def derive():
         # ONE shuffle, of the RAW docs (optimization r14, guide §2.3/2.4):
         # repartition by doc_id BEFORE the explode. HashPartitioning
         # (doc_id, N) satisfies the groupBy(doc_id, source, token)
@@ -188,7 +124,7 @@ def _ensure_doc_tf(spark, sf_dir: str, tokenizer: str = "space") -> str:
         # parallelism saves. On clusters with cores >> _N_BUCKETS,
         # raise _N_BUCKETS (a corpus-version layout choice) rather
         # than reverting to the two-shuffle shape.
-        tf = (
+        return (
             load(spark, sf_dir, "documents")
             .select("doc_id", "source", "text")
             .repartition(_N_BUCKETS, F.col("doc_id"))
@@ -204,30 +140,13 @@ def _ensure_doc_tf(spark, sf_dir: str, tokenizer: str = "space") -> str:
             .agg(F.count(F.lit(1)).cast("long").alias("tf"))
             .select("doc_id", "token", "tf", "source")
         )
-        spark.sql(f"DROP TABLE IF EXISTS {tname}")
-        (
-            tf.write.bucketBy(_N_BUCKETS, "doc_id")
-            .sortBy("doc_id")
-            .option("path", path)
-            .mode("overwrite")
-            .saveAsTable(tname)
-        )
-        with open(marker, "w") as fh:
-            json.dump(
-                {"size": size, "mtime_ns": mtime_ns,
-                 "sha256": digest, **spec},
-                fh,
-            )
-        return tname
 
-    if not spark.catalog.tableExists(tname):
-        schema = spark.read.parquet(path).schema
-        spark.sql(
-            f"CREATE TABLE {tname} ({_ddl(schema)}) USING PARQUET "
-            f"CLUSTERED BY (doc_id) SORTED BY (doc_id) "
-            f"INTO {_N_BUCKETS} BUCKETS LOCATION '{path}'"
-        )
-    return tname
+    return ensure_bucketed_table(
+        spark, tname, path, sf_dir, "documents",
+        {"n_buckets": _N_BUCKETS, "key": "doc_id", "sort": ["doc_id"],
+         "scheme": _SCHEMES[tokenizer]},
+        derive,
+    )
 
 
 def doc_tf(spark, sf_dir: str, tokenizer: str = "space"):
@@ -407,11 +326,7 @@ def toktf_append_equals_rebuild(spark, sf_dir: str):
     # this, a re-run whose re-landed base is byte-identical would be
     # stamped fresh — including run 1's append — and the duplicate
     # guard would correctly refuse the re-append)
-    base_label = hashlib.sha256(os.path.abspath(base_dir).encode()).hexdigest()[:12]
-    shutil.rmtree(
-        os.path.join(_repo_root(), ".scratch", "toktf", base_label),
-        ignore_errors=True,
-    )
+    shutil.rmtree(cache_location(base_dir)[1], ignore_errors=True)
     # land the base corpus version (full documents schema, its own dir:
     # the append must not touch the shared sf_dir projection that the
     # serving consumers read)
