@@ -4,11 +4,28 @@ Exact brute-force cosine as the baseline; label/bucket-blocked variants
 as the scale path (the same code shape used for IVF: restrict the pair
 space by a partition key before the distance computation).
 
-Cross-engine determinism: element products are computed in float64 and
-fixed-point-truncated (``floor(x * 1e9)`` → BIGINT) before summation.
-Integer sums are exact and association-order-free, so Spark and the
-DuckDB oracle produce bitwise-identical cosines (double→decimal casts
-are NOT portable at high scale — measured; see queries/common.py).
+Fixed-point contract (every kernel here, and the DuckDB oracles):
+
+- an inner product is the exact integer sum of per-term
+  ``floor(x * y * SCALE)``, each term computed in float64 as
+  (x*y, then *SCALE, then floor). Integer sums are association-order
+  free, so Spark and the oracle produce bitwise-identical scores
+  (double->decimal casts are NOT portable at high scale — measured;
+  see queries/common.py). In Spark SQL the sum is a BIGINT fold
+  (`int_dot`); in numpy it is the float64 sum of `_fp_dots_f64`,
+  which equals the integer sum bit for bit while every partial stays
+  below 2^53: ``d * SCALE * max|x|^2 < 2^53``. `_fp_matrix` checks
+  that envelope on every matrix entering a numpy kernel and raises
+  ValueError past it.
+- cosine = dot / (sqrt(dot(a, a)) * sqrt(dot(b, b))) on those exact
+  integers, so the only rounding is the final division.
+- ranking (IVF cells, probe lists, kNN candidates) is score desc,
+  then the LOWEST id first (`_rank_desc`), matching the oracle's
+  ``ORDER BY score DESC, id``.
+
+Squared-L2 kernels (Lloyd, PQ/ADC, farthest-point) and the Gram
+accumulator keep int64 sums: their terms are differences, or their
+sums run across rows and batches past the float64 envelope.
 
 Scale notes: the posexplode formulation shuffles (n_vectors × dim)
 rows; for 100 TB-scale ANN the blocked variant prunes to
@@ -24,20 +41,17 @@ from pyspark.sql import functions as F
 
 SCALE = 1_000_000_000  # fixed-point scale for exact integer sums
 
+_PD_DTYPES = {"long": "int64", "int": "int32", "double": "float64", "string": "object"}
+
 
 def _fp_dots_f64(A, B):
-    """Sum over the last axis of floor(a * b * SCALE) — the fixed-point
-    dot kernel for the chunked numpy paths, computed with ONE in-place
-    temp chain instead of three fresh allocations (the naive
-    ``np.floor(A * B * SCALE)`` materializes mult, scale, and floor
-    temps — at a 256 x 2500 x 64 chunk that is 3 x 330 MB per step and
-    the kernel goes allocator-bound: measured 9.3 s -> 2.6 s per
-    SemDeDup cell). The sum runs in float64, which is bitwise the
-    integer sum as long as every partial stays below 2^53 — i.e.
-    d * SCALE * max|x|^2 < 2^53, asserted by callers that take
-    arbitrary input (cosine_pairs_blocked_vectorized); the operand
-    order (a*b, then *SCALE, then floor) is identical IEEE ops to the
-    previous formulation and to the SQL oracles."""
+    """Sum over the last axis of floor(a * b * SCALE) (module contract),
+    computed with ONE in-place temp chain instead of three fresh
+    allocations (the naive ``np.floor(A * B * SCALE)`` materializes
+    mult, scale, and floor temps — at a 256 x 2500 x 64 chunk that is
+    3 x 330 MB per step and the kernel goes allocator-bound: measured
+    9.3 s -> 2.6 s per SemDeDup cell). The only numpy inner-product
+    kernel; operands must come from `_fp_matrix`."""
     import numpy as np
 
     t = np.multiply(A, B)
@@ -46,12 +60,72 @@ def _fp_dots_f64(A, B):
     return t.sum(axis=-1)
 
 
+def _fp_matrix(pdf, vec_col: str):
+    """The rows of ``pdf`` (an Arrow batch, or collected rows as a pandas
+    frame) whose ``vec_col`` is not NULL, and their vectors as a float64
+    matrix — shape (0, 0) when no row is left. Raises ValueError past the
+    float64-sum envelope of the module contract."""
+    import numpy as np
+
+    pdf = pdf.dropna(subset=[vec_col])
+    if not len(pdf):
+        return pdf, np.empty((0, 0))
+    V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
+    amax = float(np.abs(V).max())
+    if V.shape[1] * SCALE * amax * amax >= 2**53:
+        raise ValueError(
+            f"fixed-point float64-sum envelope exceeded: d={V.shape[1]} "
+            f"SCALE={SCALE} max|x|={amax}"
+        )
+    return pdf, V
+
+
+def _rank_desc(S, n: int):
+    """Column indices of the first ``n`` entries of each row of score
+    matrix ``S`` (or of a score vector) by score desc, then lowest
+    column index — the module's ranking rule."""
+    import numpy as np
+
+    return np.argsort(-S, axis=-1, kind="stable")[..., :n]
+
+
+def _pair_topk(ids_a, Va, ids_b, Vb, keep: int, chunk: int = 128):
+    """Top-``keep`` fixed-point cosine candidates of every row of A
+    against B, as flat (id, nbr, cosine) arrays: each A row's
+    candidates are contiguous and in rank order. ``ids_b`` must ascend,
+    so column order is nbr-id order for the tie rule. A and B are
+    non-empty; memory is bounded O(chunk x |B| x dim)."""
+    import numpy as np
+
+    ra = np.sqrt(_fp_dots_f64(Va, Va))
+    rb = np.sqrt(_fp_dots_f64(Vb, Vb))
+    keep = min(keep, len(ids_b))
+    out_i, out_n, out_c = [], [], []
+    for lo in range(0, len(ids_a), chunk):
+        cos = _fp_dots_f64(Va[lo : lo + chunk, None, :], Vb) / (
+            ra[lo : lo + chunk, None] * rb[None, :]
+        )
+        idx = _rank_desc(cos, keep)
+        out_i.append(np.repeat(ids_a[lo : lo + chunk], keep))
+        out_n.append(ids_b[idx].reshape(-1))
+        out_c.append(np.take_along_axis(cos, idx, axis=1).reshape(-1))
+    return np.concatenate(out_i), np.concatenate(out_n), np.concatenate(out_c)
+
+
+def _empty_frame(ddl: str):
+    """Zero-row pandas frame typed by a Spark DDL string of long, int,
+    double and string columns — an applyInPandas kernel's empty result."""
+    import pandas as pd
+
+    cols = (c.split() for c in ddl.split(","))
+    return pd.DataFrame({n: pd.Series([], dtype=_PD_DTYPES[t]) for n, t in cols})
+
+
 def int_dot(a, b):
-    """Exact fixed-point dot product of two array<float> columns: each
-    term is floor(x*y*SCALE) as bigint, folded in-row with an integer
-    accumulator. Integer addition is associative, so this equals the
-    oracle's unnest-and-SUM formulation bit-for-bit — while staying
-    inside whole-stage codegen (no explode, no extra shuffle)."""
+    """Exact fixed-point dot product of two array<float> columns (module
+    contract) as an in-row BIGINT fold: equal to the oracle's
+    unnest-and-SUM formulation bit-for-bit while staying inside
+    whole-stage codegen (no explode, no extra shuffle)."""
     terms = F.zip_with(
         a, b, lambda x, y: F.floor(x.cast("double") * y.cast("double") * F.lit(SCALE)).cast("long")
     )
@@ -155,43 +229,21 @@ def cosine_pairs_blocked_vectorized(
 
     Memory is bounded O(chunk x n x dim) per task by chunking the
     row axis of the pair matrix — block size does not need to fit as
-    n² x dim temporaries. Exactness: terms are floor(x*y*SCALE) in
-    float64 — identical IEEE ops to the JVM/DuckDB formulations, and
-    integer sums are association-free.
+    n² x dim temporaries. Arithmetic: the module's fixed-point contract.
     """
     import numpy as np
     import pandas as pd
 
+    ddl = "vec_a long, vec_b long, cosine double"
+
     def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         # NULL embeddings drop out (the join formulation's NULL cosine
         # fails the >= threshold filter the same way)
-        pdf = pdf.dropna(subset=[vec_col]).sort_values(id_col)
+        pdf, V = _fp_matrix(pdf.sort_values(id_col), vec_col)
         ids = pdf[id_col].to_numpy()
         n = len(ids)
         if n < 2:
-            return pd.DataFrame(
-                {
-                    "vec_a": pd.Series([], dtype="int64"),
-                    "vec_b": pd.Series([], dtype="int64"),
-                    "cosine": pd.Series([], dtype="float64"),
-                }
-            )
-        V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-        # float64 sums of floor() terms are EXACTLY the integer sums as
-        # long as every partial stays below 2^53: each |term| <
-        # SCALE * max|x|^2, so d * SCALE * max|x|^2 < 2^53 guarantees
-        # it (here: 64 * 1e9 * 0.34 ~ 2.2e10, margin ~4e5x). Skipping
-        # the astype('int64') pass removes a full copy of the dominant
-        # chunk temp (measured -30% on the sf10 SemDeDup cells); the
-        # envelope asserts fast-fail if a future embedding family
-        # violates it (the CUSUM-envelope precedent).
-        amax = float(np.abs(V).max())
-        if V.shape[1] * SCALE * amax * amax >= 2**53:
-            raise ValueError(
-                f"fixed-point float64-sum envelope exceeded: d={V.shape[1]} "
-                f"SCALE={SCALE} max|x|={amax}"
-            )
-        # exact per-vector norms: sum of floor(x*x*SCALE)
+            return _empty_frame(ddl)
         rs = np.sqrt(_fp_dots_f64(V, V))
         out_a, out_b, out_c = [], [], []
         for lo in range(0, n, chunk):
@@ -219,7 +271,7 @@ def cosine_pairs_blocked_vectorized(
     return (
         embeddings.select(id_col, block_col, vec_col)
         .groupBy(block_col)
-        .applyInPandas(block_pairs, "vec_a long, vec_b long, cosine double")
+        .applyInPandas(block_pairs, ddl)
     )
 
 
@@ -239,29 +291,19 @@ def cosine_topk_vectorized(
     import numpy as np
     import pandas as pd
 
-    qrow = embeddings.where(F.col(id_col) == query_id).select(vec_col).first()
-    if qrow is None:
+    qrows = embeddings.where(F.col(id_col) == query_id).select(vec_col).take(1)
+    _, Q = _fp_matrix(pd.DataFrame(qrows, columns=[vec_col]), vec_col)
+    if not len(Q):
         return _empty_topk(embeddings, id_col)
-    qv = np.asarray(qrow[0], dtype="float64")
-    nq_i = int(np.floor(qv * qv * SCALE).astype("int64").sum())
+    qv = Q[0]
+    rq = np.sqrt(_fp_dots_f64(qv, qv))
 
     def score(batches):
         for pdf in batches:
-            pdf = pdf.dropna(subset=[vec_col])
+            pdf, V = _fp_matrix(pdf, vec_col)
             if not len(pdf):
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series([], dtype="int64"),
-                        "cosine": pd.Series([], dtype="float64"),
-                    }
-                )
                 continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            dot_i = np.floor(V * qv[None, :] * SCALE).astype("int64").sum(axis=1)
-            na_i = np.floor(V * V * SCALE).astype("int64").sum(axis=1)
-            cos = dot_i.astype("float64") / (
-                np.sqrt(na_i.astype("float64")) * np.sqrt(float(nq_i))
-            )
+            cos = _fp_dots_f64(V, qv) / (np.sqrt(_fp_dots_f64(V, V)) * rq)
             yield pd.DataFrame({id_col: pdf[id_col], "cosine": cos})
 
     scored = embeddings.select(id_col, vec_col).mapInPandas(
@@ -400,27 +442,20 @@ def lsh_topk_vectorized(
     W = np.asarray(lsh_hyperplanes(n_bits, dim), dtype="int64")  # (bits, dim)
     bitpow = np.int64(1) << np.arange(n_bits, dtype=np.int64)
 
-    qrow = embeddings.where(F.col(id_col) == query_id).select(vec_col).first()
-    if qrow is None:
+    qrows = embeddings.where(F.col(id_col) == query_id).select(vec_col).take(1)
+    _, Q = _fp_matrix(pd.DataFrame(qrows, columns=[vec_col]), vec_col)
+    if not len(Q):
         return _empty_topk(embeddings, id_col)
-    qv = np.asarray(qrow[0], dtype="float64")
+    qv = Q[0]
     qi = np.floor(qv * SCALE).astype("int64")
     qb = int((( (qi @ W.T) >= 0).astype(np.int64) * bitpow).sum())
-    nq_i = int(np.floor(qv * qv * SCALE).astype("int64").sum())
+    rq = np.sqrt(_fp_dots_f64(qv, qv))
 
     def score(batches):
-        empty = pd.DataFrame(
-            {
-                id_col: pd.Series([], dtype="int64"),
-                "cosine": pd.Series([], dtype="float64"),
-            }
-        )
         for pdf in batches:
-            pdf = pdf.dropna(subset=[vec_col])
+            pdf, V = _fp_matrix(pdf, vec_col)
             if not len(pdf):
-                yield empty
                 continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
             Vi = np.floor(V * SCALE).astype("int64")
             codes = (((Vi @ W.T) >= 0).astype(np.int64) * bitpow).sum(axis=1)
             if multiprobe:
@@ -430,15 +465,8 @@ def lsh_topk_vectorized(
             else:
                 ok = codes == qb
             ok &= pdf[id_col].to_numpy() != query_id
-            if not ok.any():
-                yield empty
-                continue
             Vs = V[ok]
-            dot_i = np.floor(Vs * qv[None, :] * SCALE).astype("int64").sum(axis=1)
-            na_i = np.floor(Vs * Vs * SCALE).astype("int64").sum(axis=1)
-            cos = dot_i.astype("float64") / (
-                np.sqrt(na_i.astype("float64")) * np.sqrt(float(nq_i))
-            )
+            cos = _fp_dots_f64(Vs, qv) / (np.sqrt(_fp_dots_f64(Vs, Vs)) * rq)
             yield pd.DataFrame({id_col: pdf[id_col].to_numpy()[ok], "cosine": cos})
 
     scored = embeddings.select(id_col, vec_col).mapInPandas(
@@ -487,10 +515,9 @@ def ivf_topk_vectorized(
        here: the embeddings of the ``n_cells`` smallest ids (at real
        scale the centroids come from a k-means sample; everything
        downstream — assignment, probing, re-ranking — is identical).
-    2. cell assignment: argmax integer inner product (fixed-point
-       ``floor(v_i * c_i * SCALE)`` term sums — exact, engine-portable;
-       ties break to the smallest cell id). Inner-product cells = the
-       Faiss IVFFlat/METRIC_INNER_PRODUCT variant.
+    2. cell assignment: the top cell by fixed-point inner product (module
+       contract; ties to the smallest cell id). Inner-product cells =
+       the Faiss IVFFlat/METRIC_INNER_PRODUCT variant.
     3. probe: score the query against the centroids the same way, take
        the top ``n_probe`` cells.
     4. exact fixed-point cosine re-rank inside the probed cells only.
@@ -499,62 +526,28 @@ def ivf_topk_vectorized(
     batch); at corpus scale the cell id becomes the table's partition
     key, so probing prunes the SCAN (partition pruning) instead of
     filtering in-map — same plan shape as `lsh_topk_vectorized`.
-    The centroid matrix and query vector are fetched once (two bounded
-    sub-linear jobs) and closure-captured."""
+    The centroid matrix and query vector are fetched once (one bounded
+    sub-linear job, `_ivf_centroids_and_query`) and closure-captured."""
     import numpy as np
     import pandas as pd
 
-    # centroids + query vector in ONE bounded driver job (was two; each
-    # sub-second job at small sf is mostly scheduling floor)
-    rows = (
-        embeddings.where((F.col(id_col) < n_cells) | (F.col(id_col) == query_id))
-        .select(id_col, vec_col)
-        .collect()
+    C, (qv,) = _ivf_centroids_and_query(
+        embeddings, [query_id], n_cells, id_col, vec_col
     )
-    by_id = {r[0]: np.asarray(r[1], dtype="float64") for r in rows}
-    if query_id not in by_id:
+    if qv is None:
         return _empty_topk(embeddings, id_col)
-    C = np.stack([by_id[i] for i in sorted(i for i in by_id if i < n_cells)])
-    qv = by_id[query_id]
-    nq_i = int(np.floor(qv * qv * SCALE).astype("int64").sum())
-
-    def cell_scores(V: np.ndarray) -> np.ndarray:
-        # (rows, cells) exact integer IP scores: floor per TERM, then sum
-        return (
-            np.floor(V[:, None, :] * C[None, :, :] * SCALE)
-            .astype("int64")
-            .sum(axis=2)
-        )
-
-    qs = cell_scores(qv[None, :])[0]
-    # top n_probe cells by (score desc, cell id asc)
-    probe = set(np.lexsort((np.arange(len(qs)), -qs))[:n_probe].tolist())
+    rq = np.sqrt(_fp_dots_f64(qv, qv))
+    probe = _rank_desc(_fp_dots_f64(qv, C), n_probe)
 
     def score(batches):
-        empty = pd.DataFrame(
-            {
-                id_col: pd.Series([], dtype="int64"),
-                "cell": pd.Series([], dtype="int32"),
-                "cosine": pd.Series([], dtype="float64"),
-            }
-        )
         for pdf in batches:
-            pdf = pdf.dropna(subset=[vec_col])
+            pdf, V = _fp_matrix(pdf, vec_col)
             if not len(pdf):
-                yield empty
                 continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            cells = cell_scores(V).argmax(axis=1)  # first max == smallest id
-            ok = np.isin(cells, list(probe)) & (pdf[id_col].to_numpy() != query_id)
-            if not ok.any():
-                yield empty
-                continue
+            cells = _rank_desc(_fp_dots_f64(V[:, None, :], C), 1)[:, 0]
+            ok = np.isin(cells, probe) & (pdf[id_col].to_numpy() != query_id)
             Vs = V[ok]
-            dot_i = np.floor(Vs * qv[None, :] * SCALE).astype("int64").sum(axis=1)
-            na_i = np.floor(Vs * Vs * SCALE).astype("int64").sum(axis=1)
-            cos = dot_i.astype("float64") / (
-                np.sqrt(na_i.astype("float64")) * np.sqrt(float(nq_i))
-            )
+            cos = _fp_dots_f64(Vs, qv) / (np.sqrt(_fp_dots_f64(Vs, Vs)) * rq)
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].to_numpy()[ok],
@@ -588,20 +581,26 @@ def ivf_topk_vectorized(
 
 def _ivf_centroids_and_query(
     embeddings: DataFrame,
-    query_id: int | None,
+    query_ids,
     n_cells: int,
     id_col: str,
     vec_col: str,
 ):
-    """Fetch the deterministic centroid matrix (and optionally the
-    query vector) in ONE bounded driver job — n_cells+1 rows."""
+    """Fetch the deterministic centroid matrix (the vectors of ids
+    0..n_cells-1) and the vectors of ``query_ids`` in ONE bounded driver
+    job — n_cells + len(query_ids) rows. Returns ``(C, [vector or None
+    per query id])``; a query id with no row or a NULL vector gets
+    None."""
     import numpy as np
+    import pandas as pd
 
+    qids = [int(q) for q in query_ids]
     cond = F.col(id_col) < n_cells
-    if query_id is not None:
-        cond = cond | (F.col(id_col) == query_id)
+    if qids:
+        cond = cond | F.col(id_col).isin(qids)
     rows = embeddings.where(cond).select(id_col, vec_col).collect()
-    by_id = {r[0]: np.asarray(r[1], dtype="float64") for r in rows}
+    pdf, V = _fp_matrix(pd.DataFrame(rows, columns=[id_col, vec_col]), vec_col)
+    by_id = dict(zip(pdf[id_col].tolist(), V))
     cell_ids = sorted(i for i in by_id if i < n_cells)
     # row position in C must equal the cell id the SQL oracle computes
     # with; a sparse id space would silently skew assignment (ADVICE
@@ -611,8 +610,32 @@ def _ivf_centroids_and_query(
             f"IVF centroid ids must be dense 0..{n_cells - 1}; got {cell_ids}"
         )
     C = np.stack([by_id[i] for i in cell_ids])
-    qv = by_id.get(query_id) if query_id is not None else None
-    return C, qv
+    return C, [by_id.get(q) for q in qids]
+
+
+def _assign_cells(
+    rows: DataFrame, C, n: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id, vector, cell, rank) for every row of ``rows`` with a non-NULL
+    vector, once per its top-``n`` cells of centroid matrix ``C`` by
+    fixed-point inner product (module contract); rank 0 is the row's own
+    cell. A pure Arrow-batch map."""
+    import numpy as np
+
+    def assign(batches):
+        for pdf in batches:
+            pdf, V = _fp_matrix(pdf, vec_col)
+            if not len(pdf):
+                continue
+            top = _rank_desc(_fp_dots_f64(V[:, None, :], C), n)
+            out = pdf.loc[pdf.index.repeat(top.shape[1])].copy()
+            out["cell"] = top.reshape(-1).astype("int32")
+            out["rank"] = np.tile(np.arange(top.shape[1], dtype="int32"), len(pdf))
+            yield out
+
+    rows = rows.select(id_col, vec_col)
+    schema = rows.schema.simpleString()[7:-1]
+    return rows.mapInPandas(assign, f"{schema}, cell int, rank int")
 
 
 def ivf_write_index(
@@ -623,8 +646,8 @@ def ivf_write_index(
     vec_col: str = "embedding",
     centroids=None,
 ) -> None:
-    """Build the IVF index: assign every vector its cell (same exact
-    integer-IP argmax as `ivf_topk_vectorized`) and write the table
+    """Build the IVF index: assign every vector its cell (same cell
+    rule as `ivf_topk_vectorized`) and write the table
     parquet-partitioned by cell id. One pass over the data; the
     assignment is a pure Arrow-batch map. Run once per corpus version —
     the ANN query path (`ivf_topk_pruned`) then partition-prunes.
@@ -634,30 +657,12 @@ def ivf_write_index(
     for incremental probing — `knn_probe_index` re-reads the same
     matrix as the index's lowest-id rows, so pass those)."""
     import numpy as np
-    import pandas as pd
 
     if centroids is not None:
         C = np.asarray(centroids, dtype="float64")
     else:
-        C, _ = _ivf_centroids_and_query(embeddings, None, n_cells, id_col, vec_col)
-
-    def assign(batches):
-        for pdf in batches:
-            pdf = pdf.dropna(subset=[vec_col])
-            if not len(pdf):
-                continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            # exact-integer argmax is unchanged under the float64 sum
-            # (every score is an exact integer < 2^53; _fp_dots_f64 doc)
-            scores = _fp_dots_f64(V[:, None, :], C[None, :, :])
-            out = pdf.copy()
-            out["cell"] = scores.argmax(axis=1).astype("int32")
-            yield out
-
-    schema = embeddings.select(id_col, vec_col).schema.simpleString()[7:-1]
-    assigned = embeddings.select(id_col, vec_col).mapInPandas(
-        assign, f"{schema}, cell int"
-    )
+        C, _ = _ivf_centroids_and_query(embeddings, [], n_cells, id_col, vec_col)
+    assigned = _assign_cells(embeddings, C, 1, id_col, vec_col).drop("rank")
     assigned.write.mode("overwrite").partitionBy("cell").parquet(path)
 
 
@@ -682,34 +687,22 @@ def ivf_topk_pruned(
     import numpy as np
     import pandas as pd
 
-    C, qv = _ivf_centroids_and_query(embeddings, query_id, n_cells, id_col, vec_col)
+    C, (qv,) = _ivf_centroids_and_query(
+        embeddings, [query_id], n_cells, id_col, vec_col
+    )
     if qv is None:
         return _empty_topk(embeddings, id_col)
-    nq_i = int(np.floor(qv * qv * SCALE).astype("int64").sum())
-    qs = np.floor(qv[None, :] * C * SCALE).astype("int64").sum(axis=1)
-    probe = [int(c) for c in np.lexsort((np.arange(len(qs)), -qs))[:n_probe]]
+    rq = np.sqrt(_fp_dots_f64(qv, qv))
+    probe = _rank_desc(_fp_dots_f64(qv, C), n_probe).tolist()
 
     idx = spark.read.parquet(index_path)
 
     def rerank(batches):
-        empty = pd.DataFrame(
-            {
-                id_col: pd.Series([], dtype="int64"),
-                "cell": pd.Series([], dtype="int32"),
-                "cosine": pd.Series([], dtype="float64"),
-            }
-        )
         for pdf in batches:
-            pdf = pdf[pdf[id_col] != query_id].dropna(subset=[vec_col])
+            pdf, V = _fp_matrix(pdf[pdf[id_col] != query_id], vec_col)
             if not len(pdf):
-                yield empty
                 continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            dot_i = np.floor(V * qv[None, :] * SCALE).astype("int64").sum(axis=1)
-            na_i = np.floor(V * V * SCALE).astype("int64").sum(axis=1)
-            cos = dot_i.astype("float64") / (
-                np.sqrt(na_i.astype("float64")) * np.sqrt(float(nq_i))
-            )
+            cos = _fp_dots_f64(V, qv) / (np.sqrt(_fp_dots_f64(V, V)) * rq)
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].to_numpy(),
@@ -755,9 +748,7 @@ def ann_recall_audit(
     distributed top-k: corpus never shuffles, partials do. Everything
     downstream of the window is counting on <= |queries| * 2 * k rows.
 
-    All scoring uses the exact fixed-point integer sums of the other
-    similarity operators (floor per term, int64 sums; the only float op
-    is the final cosine division on identical integers) with total
+    All scoring follows the module's fixed-point contract, with total
     order (cosine DESC, id) — bitwise-reproducible and oracle-portable.
     Recall is n_hit / n_true where n_true = |bf top-k| (== k except in
     degenerate tiny corpora)."""
@@ -765,84 +756,39 @@ def ann_recall_audit(
     import pandas as pd
 
     qset = sorted(set(query_ids))
-    rows = (
-        embeddings.where(
-            (F.col(id_col) < n_cells) | F.col(id_col).isin([int(q) for q in qset])
-        )
-        .select(id_col, vec_col)
-        .collect()
-    )
-    by_id = {r[0]: np.asarray(r[1], dtype="float64") for r in rows}
-    cell_ids = sorted(i for i in by_id if i < n_cells)
-    # C's row positions must equal cell ids (the oracle's argmax index
-    # IS the vec_id); a sparse centroid id space must fail loudly
-    # rather than silently skew cell assignment (ADVICE r7).
-    if cell_ids != list(range(n_cells)):
-        raise ValueError(
-            f"IVF centroid ids must be dense 0..{n_cells - 1}; got {cell_ids}"
-        )
-    C = np.stack([by_id[i] for i in cell_ids])
-    live_q = [q for q in qset if q in by_id]
-    if not live_q:
+    C, qvecs = _ivf_centroids_and_query(embeddings, qset, n_cells, id_col, vec_col)
+    live = [(q, v) for q, v in zip(qset, qvecs) if v is not None]
+    if not live:
         return embeddings.sparkSession.createDataFrame(
             [], "query_id long, n_true long, n_hit long, recall_pct double"
         )
-    Qm = np.stack([by_id[q] for q in live_q])  # (Q, dim)
-    nq_i = np.floor(Qm * Qm * SCALE).astype("int64").sum(axis=1)  # (Q,)
-    # per-query probe cells: integer IP score vs centroids, top n_probe
-    # by (score DESC, cell_id ASC)
-    qcs = np.floor(Qm[:, None, :] * C[None, :, :] * SCALE).astype("int64").sum(axis=2)
-    probes = []
-    for j in range(len(live_q)):
-        order = np.lexsort((np.arange(qcs.shape[1]), -qcs[j]))
-        probes.append(set(order[:n_probe].tolist()))
-    qids = np.asarray(live_q, dtype="int64")
+    qids = np.asarray([q for q, _ in live], dtype="int64")
+    Qm = np.stack([v for _, v in live])  # (Q, dim)
+    rq = np.sqrt(_fp_dots_f64(Qm, Qm))
+    probes = _rank_desc(_fp_dots_f64(Qm[:, None, :], C), n_probe)  # (Q, n_probe)
 
     def partials(batches):
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series([], dtype="int64"),
-                id_col: pd.Series([], dtype="int64"),
-                "side": pd.Series([], dtype="object"),
-                "cosine": pd.Series([], dtype="float64"),
-            }
-        )
         for pdf in batches:
-            pdf = pdf.dropna(subset=[vec_col])
+            # id order makes column index order id order for _rank_desc
+            pdf, V = _fp_matrix(pdf.sort_values(id_col, kind="stable"), vec_col)
             if not len(pdf):
-                yield empty
                 continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
             ids = pdf[id_col].to_numpy().astype("int64")
-            cells = (
-                np.floor(V[:, None, :] * C[None, :, :] * SCALE)
-                .astype("int64")
-                .sum(axis=2)
-                .argmax(axis=1)  # first max == smallest cell id
-            )
-            na_i = np.floor(V * V * SCALE).astype("int64").sum(axis=1)
-            D = np.floor(V[:, None, :] * Qm[None, :, :] * SCALE).astype("int64").sum(
-                axis=2
+            cells = _rank_desc(_fp_dots_f64(V[:, None, :], C), 1)[:, 0]
+            cos = _fp_dots_f64(V[:, None, :], Qm) / (
+                np.sqrt(_fp_dots_f64(V, V))[:, None] * rq[None, :]
             )  # (rows, Q)
-            cos = D.astype("float64") / (
-                np.sqrt(na_i.astype("float64"))[:, None]
-                * np.sqrt(nq_i.astype("float64"))[None, :]
-            )
             out_q, out_i, out_s, out_c = [], [], [], []
             for j, q in enumerate(qids):
                 keep = ids != q
                 for side, mask in (
                     ("bf", keep),
-                    ("ivf", keep & np.isin(cells, list(probes[j]))),
+                    ("ivf", keep & np.isin(cells, probes[j])),
                 ):
-                    if not mask.any():
-                        continue
+                    # partial top-k by (cosine DESC, id ASC): the batch's
+                    # prefix of the global order
                     mi = np.nonzero(mask)[0]
-                    # partial top-k by (cosine DESC, id ASC): a stable
-                    # lexsort on identical doubles reproduces the
-                    # global order's per-batch prefix exactly
-                    order = np.lexsort((ids[mi], -cos[mi, j]))[:k]
-                    sel = mi[order]
+                    sel = mi[_rank_desc(cos[mi, j], k)]
                     out_q.extend([q] * len(sel))
                     out_i.extend(ids[sel].tolist())
                     out_s.extend([side] * len(sel))
@@ -929,14 +875,6 @@ def gram_matrix_partials(
                     .sum(axis=0)
                 )
         if acc is None:
-            yield pd.DataFrame(
-                {
-                    "i": pd.Series([], dtype="int32"),
-                    "j": pd.Series([], dtype="int32"),
-                    "s": pd.Series([], dtype="int64"),
-                    "n": pd.Series([], dtype="int64"),
-                }
-            )
             return
         d = acc.shape[0]
         iu, ju = np.triu_indices(d)
@@ -1057,7 +995,6 @@ def knn_join_partials(
     n_blocks: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    chunk: int = 128,
 ) -> DataFrame:
     """Distributed EXACT k-NN JOIN partials: every vector meets every
     other through a block-nested-loop, with per-block top-k pruning so
@@ -1077,17 +1014,14 @@ def knn_join_partials(
     the corpus. Growing the corpus grows B; per-task work stays
     n/B x n/B.
 
-    Per-block candidates are top-(k+1) by (cosine desc, nbr id asc)
+    Per-block candidates are top-(k+1) by the module's ranking rule
     INCLUDING a possible self-pair, which is then dropped — taking one
     extra guarantees >= k non-self survivors per block without
     perturbing any kept cosine value (no -inf masking touches the
-    floats, preserving the bitwise fixed-point contract:
-    floor(x*y*SCALE) int sums, dot/(sqrt(na)*sqrt(nb)) — identical to
-    the oracle's unnest-and-SUM formulation).
+    floats, so the fixed-point contract holds bitwise).
 
     Returns partial rows (vec_id, nbr_id, cosine); callers apply the
     exact merge (see queries.similarity.knn_join_topk)."""
-    import numpy as np
     import pandas as pd
 
     B = int(n_blocks)
@@ -1112,56 +1046,20 @@ def knn_join_partials(
     both = a.select("ablk", "bblk", "side", "id", "vec").unionByName(
         b.select("ablk", "bblk", "side", "id", "vec")
     )
+    ddl = "vec_id long, nbr_id long, cosine double"
 
     def block_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "vec_id": pd.Series([], dtype="int64"),
-                "nbr_id": pd.Series([], dtype="int64"),
-                "cosine": pd.Series([], dtype="float64"),
-            }
+        A, Va = _fp_matrix(pdf[pdf["side"] == 0], "vec")
+        Bp, Vb = _fp_matrix(pdf[pdf["side"] == 1].sort_values("id"), "vec")
+        if not len(A) or not len(Bp):
+            return _empty_frame(ddl)
+        i, n, c = _pair_topk(A["id"].to_numpy(), Va, Bp["id"].to_numpy(), Vb, k + 1)
+        non_self = i != n
+        return pd.DataFrame(
+            {"vec_id": i[non_self], "nbr_id": n[non_self], "cosine": c[non_self]}
         )
-        A = pdf[pdf["side"] == 0]
-        Bp = pdf[pdf["side"] == 1].sort_values("id")
-        if A.empty or Bp.empty:
-            return empty
-        ids_a = A["id"].to_numpy()
-        ids_b = Bp["id"].to_numpy()
-        Va = np.stack(A["vec"].to_numpy()).astype("float64")
-        Vb = np.stack(Bp["vec"].to_numpy()).astype("float64")
-        # _fp_dots_f64: float64 sums of the floor() terms are bitwise
-        # the integer sums under the 2^53 envelope (helper doc); the
-        # in-place temp chain removes the allocator-bound 3-temp cost
-        ra = np.sqrt(_fp_dots_f64(Va, Va))
-        rb = np.sqrt(_fp_dots_f64(Vb, Vb))
-        keep_n = min(k + 1, len(ids_b))
-        out = []
-        for lo in range(0, len(ids_a), chunk):
-            hi = min(lo + chunk, len(ids_a))
-            dots = _fp_dots_f64(Va[lo:hi, None, :], Vb[None, :, :])
-            cos = dots / (ra[lo:hi, None] * rb[None, :])
-            # stable argsort on -cos: ties fall back to Vb's id order
-            # (pre-sorted ascending), matching the merge's tiebreak
-            idx = np.argsort(-cos, axis=1, kind="stable")[:, :keep_n]
-            m = hi - lo
-            cand_id = np.repeat(ids_a[lo:hi], keep_n)
-            cand_nbr = ids_b[idx].reshape(-1)
-            cand_cos = cos[np.repeat(np.arange(m), keep_n), idx.reshape(-1)]
-            non_self = cand_id != cand_nbr
-            out.append(
-                pd.DataFrame(
-                    {
-                        "vec_id": cand_id[non_self],
-                        "nbr_id": cand_nbr[non_self],
-                        "cosine": cand_cos[non_self],
-                    }
-                )
-            )
-        return pd.concat(out, ignore_index=True) if out else empty
 
-    return both.groupBy("ablk", "bblk").applyInPandas(
-        block_topk, "vec_id long, nbr_id long, cosine double"
-    )
+    return both.groupBy("ablk", "bblk").applyInPandas(block_topk, ddl)
 
 
 def knn_join_within_cells(
@@ -1170,13 +1068,11 @@ def knn_join_within_cells(
     k: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    chunk: int = 128,
     assigned: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate k-NN JOIN, IVF production path: assign every vector
-    to its IVF cell (same deterministic centroids + exact integer-IP
-    argmax as `ivf_write_index`; argmax ties resolve to the lowest
-    cell, matching the oracle's (score DESC, cell_id) rank), then
+    to its IVF cell (same deterministic centroids and cell rule as
+    `ivf_write_index`), then
     compute the EXACT top-k within each cell in one applyInPandas pass
     per cell — no cross-cell pairs, no merge step (each vector lives
     in exactly one group, so in-kernel ranks are final).
@@ -1192,9 +1088,8 @@ def knn_join_within_cells(
 
     ``assigned`` (optimization r15, VERDICT r14 #7): a pre-assigned
     (id, vec, cell) relation — the at-rest IVF index
-    (`ivf_write_index` partitions the corpus by the IDENTICAL argmax:
-    same centroids, same fixed-point scores, np.argmax ties -> lowest
-    cell). Passing it removes the assignment mapInPandas, leaving ONE
+    (`ivf_write_index` partitions the corpus by the IDENTICAL cell
+    rule). Passing it removes the assignment mapInPandas, leaving ONE
     Python boundary (the per-cell kernel) and no centroid collect at
     plan build — the serving posture every IVF deployment uses (the
     index is built once per corpus version at ingest). Default None
@@ -1205,80 +1100,30 @@ def knn_join_within_cells(
     import pandas as pd
 
     if assigned is None:
-        C, _ = _ivf_centroids_and_query(
-            embeddings, None, n_cells, id_col, vec_col
-        )
-
-        def assign(batches):
-            for pdf in batches:
-                pdf = pdf.dropna(subset=[vec_col])
-                if not len(pdf):
-                    continue
-                V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-                # exact-integer argmax is unchanged under the float64
-                # sum (every score is an exact integer < 2^53;
-                # _fp_dots_f64 doc)
-                scores = _fp_dots_f64(V[:, None, :], C[None, :, :])
-                out = pdf.copy()
-                out["cell"] = scores.argmax(axis=1).astype("int32")
-                yield out
-
-        assigned = embeddings.select(id_col, vec_col).mapInPandas(
-            assign,
-            f"{id_col} long, {vec_col} array<float>, cell int",
-        )
-    else:
-        # the index build dropped null vectors before assigning; the
-        # cast pins the partition-discovered cell column to int32 (the
-        # kernel's declared schema)
-        assigned = assigned.select(
-            id_col, vec_col, F.col("cell").cast("int").alias("cell")
-        ).where(F.col(vec_col).isNotNull())
+        C, _ = _ivf_centroids_and_query(embeddings, [], n_cells, id_col, vec_col)
+        assigned = _assign_cells(embeddings, C, 1, id_col, vec_col)
+    # the cast pins a partition-discovered cell column to int32 (the
+    # kernel's declared schema)
+    assigned = assigned.select(id_col, vec_col, F.col("cell").cast("int").alias("cell"))
+    ddl = "vec_id long, nbr_id long, rk int, cosine double, cell int"
 
     def cell_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "vec_id": pd.Series([], dtype="int64"),
-                "nbr_id": pd.Series([], dtype="int64"),
-                "rk": pd.Series([], dtype="int32"),
-                "cosine": pd.Series([], dtype="float64"),
-                "cell": pd.Series([], dtype="int32"),
-            }
-        )
-        pdf = pdf.sort_values(id_col)
-        n = len(pdf)
-        if n < 2:
-            return empty
-        cell = int(pdf["cell"].iloc[0])
+        pdf, V = _fp_matrix(pdf.sort_values(id_col), vec_col)
+        if len(pdf) < 2:
+            return _empty_frame(ddl)
         ids = pdf[id_col].to_numpy()
-        V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-        r = np.sqrt(_fp_dots_f64(V, V))
-        keep_n = min(k + 1, n)
-        frames = []
-        for lo in range(0, n, chunk):
-            hi = min(lo + chunk, n)
-            dots = _fp_dots_f64(V[lo:hi, None, :], V[None, :, :])
-            cos = dots / (r[lo:hi, None] * r[None, :])
-            idx = np.argsort(-cos, axis=1, kind="stable")[:, :keep_n]
-            m = hi - lo
-            cand_id = np.repeat(ids[lo:hi], keep_n)
-            cand_nbr = ids[idx].reshape(-1)
-            cand_cos = cos[np.repeat(np.arange(m), keep_n), idx.reshape(-1)]
-            f = pd.DataFrame(
-                {"vec_id": cand_id, "nbr_id": cand_nbr, "cosine": cand_cos}
-            )
-            f = f[f["vec_id"] != f["nbr_id"]]
-            # candidates arrive rank-ordered per row; number the
-            # survivors and keep the first k
-            f["rk"] = f.groupby("vec_id").cumcount().astype("int32") + 1
-            frames.append(f[f["rk"] <= k])
-        out = pd.concat(frames, ignore_index=True) if frames else empty
-        out["cell"] = np.int32(cell)
-        return out[["vec_id", "nbr_id", "rk", "cosine", "cell"]]
+        i, n, c = _pair_topk(ids, V, ids, V, k + 1)
+        non_self = i != n
+        f = pd.DataFrame(
+            {"vec_id": i[non_self], "nbr_id": n[non_self], "cosine": c[non_self]}
+        )
+        # candidates arrive rank-ordered per row; number the survivors
+        # and keep the first k
+        f["rk"] = f.groupby("vec_id").cumcount().astype("int32") + 1
+        f = f[f["rk"] <= k].assign(cell=np.int32(pdf["cell"].iloc[0]))
+        return f[["vec_id", "nbr_id", "rk", "cosine", "cell"]]
 
-    return assigned.groupBy("cell").applyInPandas(
-        cell_topk, "vec_id long, nbr_id long, rk int, cosine double, cell int"
-    )
+    return assigned.groupBy("cell").applyInPandas(cell_topk, ddl)
 
 
 def knn_probe_index(
@@ -1304,40 +1149,16 @@ def knn_probe_index(
     top-ks. The index text/vectors outside probed cells are never
     read.
 
-    Exactness contract: same fixed-point arithmetic and (cosine desc,
-    id asc) tiebreak as the whole kNN family; probe-cell selection
-    ties resolve to the lowest cell id (stable argsort on -score),
-    mirroring the oracle's (score DESC, cell_id) rank."""
-    import numpy as np
+    Exactness contract: the module's fixed-point arithmetic and ranking
+    rule, for candidates and for probe cells alike."""
     import pandas as pd
 
     idx = spark.read.parquet(index_path)
     crows = (
         idx.select(id_col, vec_col).orderBy(id_col).limit(n_cells).collect()
     )
-    C = np.stack([np.asarray(r[vec_col], dtype="float64") for r in crows])
-
-    def assign(batches):
-        for pdf in batches:
-            pdf = pdf.dropna(subset=[vec_col])
-            if not len(pdf):
-                continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            scores = (
-                np.floor(V[:, None, :] * C[None, :, :] * SCALE)
-                .astype("int64")
-                .sum(axis=2)
-            )
-            order = np.argsort(-scores, axis=1, kind="stable")[:, :n_probe]
-            out = pdf.loc[pdf.index.repeat(order.shape[1])].copy()
-            out["cell"] = order.reshape(-1).astype("int32")
-            yield out
-
-    bat = (
-        batch.select(id_col, vec_col)
-        .mapInPandas(assign, f"{id_col} long, {vec_col} array<float>, cell int")
-        .persist()
-    )
+    _, C = _fp_matrix(pd.DataFrame(crows, columns=[id_col, vec_col]), vec_col)
+    bat = _assign_cells(batch, C, n_probe, id_col, vec_col).persist()
     probe_cells = [int(r["cell"]) for r in bat.select("cell").distinct().collect()]
 
     a = bat.select(
@@ -1353,60 +1174,19 @@ def knn_probe_index(
         F.col(vec_col).alias("vec"),
     )
     both = a.unionByName(b)
+    ddl = "vec_id long, nbr_id long, cosine double"
 
     def cell_probe(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "vec_id": pd.Series([], dtype="int64"),
-                "nbr_id": pd.Series([], dtype="int64"),
-                "cosine": pd.Series([], dtype="float64"),
-            }
-        )
-        A = pdf[pdf["side"] == 0]
-        Bp = pdf[pdf["side"] == 1].sort_values("id")
-        if A.empty or Bp.empty:
-            return empty
-        ids_a = A["id"].to_numpy()
-        ids_b = Bp["id"].to_numpy()
-        Va = np.stack(A["vec"].to_numpy()).astype("float64")
-        Vb = np.stack(Bp["vec"].to_numpy()).astype("float64")
-        ra = np.sqrt(
-            np.floor(Va * Va * SCALE).astype("int64").sum(axis=1).astype("float64")
-        )
-        rb = np.sqrt(
-            np.floor(Vb * Vb * SCALE).astype("int64").sum(axis=1).astype("float64")
-        )
-        keep_n = min(k, len(ids_b))
-        frames = []
-        chunk = 256  # bound the pair matrix: O(chunk x |cell| x dim)
-        for lo in range(0, len(ids_a), chunk):
-            hi = min(lo + chunk, len(ids_a))
-            dots = (
-                np.floor(Va[lo:hi, None, :] * Vb[None, :, :] * SCALE)
-                .astype("int64")
-                .sum(axis=2)
-            )
-            cos = dots.astype("float64") / (ra[lo:hi, None] * rb[None, :])
-            sel = np.argsort(-cos, axis=1, kind="stable")[:, :keep_n]
-            m = hi - lo
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "vec_id": np.repeat(ids_a[lo:hi], keep_n),
-                        "nbr_id": ids_b[sel].reshape(-1),
-                        "cosine": cos[
-                            np.repeat(np.arange(m), keep_n), sel.reshape(-1)
-                        ],
-                    }
-                )
-            )
-        return pd.concat(frames, ignore_index=True) if frames else empty
+        A, Va = _fp_matrix(pdf[pdf["side"] == 0], "vec")
+        Bp, Vb = _fp_matrix(pdf[pdf["side"] == 1].sort_values("id"), "vec")
+        if not len(A) or not len(Bp):
+            return _empty_frame(ddl)
+        i, n, c = _pair_topk(A["id"].to_numpy(), Va, Bp["id"].to_numpy(), Vb, k)
+        return pd.DataFrame({"vec_id": i, "nbr_id": n, "cosine": c})
 
     from pyspark.sql import Window
 
-    part = both.groupBy("cell").applyInPandas(
-        cell_probe, "vec_id long, nbr_id long, cosine double"
-    )
+    part = both.groupBy("cell").applyInPandas(cell_probe, ddl)
     w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("nbr_id"))
     return (
         part.withColumn("rk", F.row_number().over(w))
@@ -1506,19 +1286,8 @@ def pq_train_partials(
                         }
                     )
                 )
-        yield (
-            pd.concat(frames, ignore_index=True)
-            if frames
-            else pd.DataFrame(
-                {
-                    "m": pd.Series([], dtype="int32"),
-                    "code": pd.Series([], dtype="int64"),
-                    "i": pd.Series([], dtype="int32"),
-                    "s": pd.Series([], dtype="int64"),
-                    "n": pd.Series([], dtype="int64"),
-                }
-            )
-        )
+        if frames:
+            yield pd.concat(frames, ignore_index=True)
 
     return embeddings.select(vec_col).mapInPandas(
         fold, "m int, code long, i int, s long, n long"
@@ -1639,13 +1408,6 @@ def farthest_point_partials(
                     "vid": pd.Series([best_id], dtype="int64"),
                 }
             )
-        else:
-            yield pd.DataFrame(
-                {
-                    "md": pd.Series([], dtype="int64"),
-                    "vid": pd.Series([], dtype="int64"),
-                }
-            )
 
     return embeddings.select(id_col, vec_col).mapInPandas(fold, "md long, vid long")
 
@@ -1657,113 +1419,48 @@ def knn_join_multiprobe(
     n_probe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    chunk: int = 128,
 ) -> DataFrame:
     """Multi-probe IVF k-NN join — the standard recall knob between
     `knn_join_within_cells` (n_probe=1) and the exact join: every
-    vector still lives in exactly ONE build cell (its integer-IP
-    argmax), but as a PROBE it visits its top ``n_probe`` cells, so a
+    vector still lives in exactly ONE build cell (its top cell), but
+    as a PROBE it visits its top ``n_probe`` cells, so a
     true neighbor just across a cell boundary is recovered at the cost
     of replicating only the probe side n_probe-fold. Shuffle volume is
     n * (n_probe) vector rows + n build rows; per-task work is
     O(n_probe * (n/C)^2) — the corpus is never all-paired.
 
-    Determinism contract matches the whole family: probe-cell ranking
-    by (score DESC, cell id ASC), candidate ranking by (cosine DESC,
-    nbr id ASC), fixed-point integer dots — the per-cell candidate
-    lists are bitwise-equal to the exact join restricted to the cell,
-    and the cross-cell merge is one per-id window downstream (the
-    caller applies it; this returns per-cell candidates, k+1 per probe
-    per cell so the post-self-drop top-k is always contained).
+    Determinism contract matches the whole family (module doc): probe
+    cells and candidates both follow the ranking rule, so the per-cell
+    candidate lists are bitwise-equal to the exact join restricted to
+    the cell, and the cross-cell merge is one per-id window downstream
+    (the caller applies it; this returns per-cell candidates, k+1 per
+    probe per cell so the post-self-drop top-k is always contained).
     """
     import numpy as np
     import pandas as pd
 
     if not 1 <= n_probe <= n_cells:
         raise ValueError("n_probe must be in [1, n_cells]")
-    C, _ = _ivf_centroids_and_query(embeddings, None, n_cells, id_col, vec_col)
-
-    def assign(batches):
-        for pdf in batches:
-            pdf = pdf.dropna(subset=[vec_col])
-            if not len(pdf):
-                continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            scores = (
-                np.floor(V[:, None, :] * C[None, :, :] * SCALE)
-                .astype("int64")
-                .sum(axis=2)
-            )
-            order = np.lexsort(
-                (np.tile(np.arange(len(C)), (len(V), 1)), -scores), axis=1
-            )[:, :n_probe]
-            frames = []
-            for r in range(n_probe):
-                f = pdf.copy()
-                f["cell"] = order[:, r].astype("int32")
-                # rank-0 cell is ALSO the vector's build home
-                f["is_build"] = r == 0
-                frames.append(f)
-            yield pd.concat(frames, ignore_index=True)
-
-    assigned = embeddings.select(id_col, vec_col).mapInPandas(
-        assign,
-        f"{id_col} long, {vec_col} array<float>, cell int, is_build boolean",
-    )
+    C, _ = _ivf_centroids_and_query(embeddings, [], n_cells, id_col, vec_col)
+    # every row replicates to its top n_probe cells; the rank-0 copy is
+    # ALSO the vector's build home
+    assigned = _assign_cells(embeddings, C, n_probe, id_col, vec_col)
+    ddl = "vec_id long, nbr_id long, cosine double, cell int"
 
     def cell_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "vec_id": pd.Series([], dtype="int64"),
-                "nbr_id": pd.Series([], dtype="int64"),
-                "cosine": pd.Series([], dtype="float64"),
-                "cell": pd.Series([], dtype="int32"),
-            }
-        )
-        pdf = pdf.sort_values(id_col)
-        cell = int(pdf["cell"].iloc[0])
-        build = pdf[pdf["is_build"]]
-        nb = len(build)
-        if nb == 0 or len(pdf) < 2:
-            return empty
-        bids = build[id_col].to_numpy()
-        BV = np.stack(build[vec_col].to_numpy()).astype("float64")
-        rb = np.sqrt(
-            np.floor(BV * BV * SCALE).astype("int64").sum(axis=1).astype("float64")
-        )
         # probes = every row in the group (the build copy doubles as
         # its own rank-0 probe; replicas are probe-only)
+        pdf, PV = _fp_matrix(pdf.sort_values(id_col), vec_col)
+        build = pdf["rank"].to_numpy() == 0
+        if not build.any() or len(pdf) < 2:
+            return _empty_frame(ddl)
         pids = pdf[id_col].to_numpy()
-        PV = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-        rp = np.sqrt(
-            np.floor(PV * PV * SCALE).astype("int64").sum(axis=1).astype("float64")
+        i, n, c = _pair_topk(pids, PV, pids[build], PV[build], k + 1)
+        non_self = i != n
+        f = pd.DataFrame(
+            {"vec_id": i[non_self], "nbr_id": n[non_self], "cosine": c[non_self]}
         )
-        keep_n = min(k + 1, nb)
-        frames = []
-        for lo in range(0, len(pdf), chunk):
-            hi = min(lo + chunk, len(pdf))
-            dots = (
-                np.floor(PV[lo:hi, None, :] * BV[None, :, :] * SCALE)
-                .astype("int64")
-                .sum(axis=2)
-            )
-            cos = dots.astype("float64") / (rp[lo:hi, None] * rb[None, :])
-            idx = np.argsort(-cos, axis=1, kind="stable")[:, :keep_n]
-            m = hi - lo
-            f = pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pids[lo:hi], keep_n),
-                    "nbr_id": bids[idx].reshape(-1),
-                    "cosine": cos[np.repeat(np.arange(m), keep_n), idx.reshape(-1)],
-                }
-            )
-            f = f[f["vec_id"] != f["nbr_id"]]
-            f["rk_local"] = f.groupby("vec_id").cumcount() + 1
-            frames.append(f[f["rk_local"] <= k].drop(columns=["rk_local"]))
-        out = pd.concat(frames, ignore_index=True) if frames else empty
-        out["cell"] = np.int32(cell)
-        return out[["vec_id", "nbr_id", "cosine", "cell"]]
+        f = f[f.groupby("vec_id").cumcount() < k]
+        return f.assign(cell=np.int32(pdf["cell"].iloc[0]))
 
-    return assigned.groupBy("cell").applyInPandas(
-        cell_topk, "vec_id long, nbr_id long, cosine double, cell int"
-    )
+    return assigned.groupBy("cell").applyInPandas(cell_topk, ddl)

@@ -1450,16 +1450,18 @@ def dedup_semantic_cells(spark, sf_dir):
     mapInPandas argmax assigns cells with ZERO shuffle — the previous
     crossJoin x groupBy formulation pushed an n x K intermediate
     CARRYING THE EMBEDDING ARRAY through the shuffle. Cosines stay
-    bitwise cross-engine: floor(x*y*S) int sums, dot/(sqrt*sqrt), ties
-    to the lowest cid (numpy argmax first-max == the oracle window's
-    cos DESC, cid ASC). The assigned table persists DISK_ONLY because
-    it feeds two branches (pair kernel + yield report)."""
-    import numpy as np
+    bitwise cross-engine (the operators.similarity fixed-point contract:
+    the nearest centroid is the top fixed-point cosine, ties to the
+    lowest cid — the oracle window's cos DESC, cid ASC). The assigned
+    table persists DISK_ONLY because it feeds two branches (pair kernel
+    + yield report)."""
+    import pandas as pd
 
     from pyspark import StorageLevel
 
     from ..operators.similarity import (
-        _fp_dots_f64,
+        _fp_matrix,
+        _pair_topk,
         cosine_pairs_blocked_vectorized,
     )
 
@@ -1467,32 +1469,23 @@ def dedup_semantic_cells(spark, sf_dir):
     n = emb.count()
     k_cells = max(_SEM_K, n // _SEM_CELL_ROWS)
     crows = emb.where(F.col("vec_id") < k_cells).orderBy("vec_id").collect()
-    if not crows:
+    cents, C = _fp_matrix(
+        pd.DataFrame(crows, columns=["vec_id", "embedding"]), "embedding"
+    )
+    if not len(cents):
         return spark.createDataFrame(
             [], "cell int, n_total long, n_dropped long, n_kept long"
         )
-    cids = np.array([r["vec_id"] for r in crows], dtype="int64")
-    C = np.stack([np.asarray(r["embedding"], dtype="float64") for r in crows])
-    cn = _fp_dots_f64(C, C)
+    cids = cents["vec_id"].to_numpy()
 
     def assign(batches):
         for pdf in batches:
+            pdf, V = _fp_matrix(pdf, "embedding")
             if not len(pdf):
                 continue
-            V = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            # float64 sums of floor() terms are exact under the
-            # d * SCALE * max|x|^2 < 2^53 envelope (_fp_dots_f64 doc;
-            # cosine_pairs_blocked_vectorized asserts it for this
-            # embedding family downstream of the same rows)
-            vn = _fp_dots_f64(V, V)
-            cells = np.empty(len(pdf), dtype="int32")
-            for lo in range(0, len(pdf), 1024):  # bound the B x K x d temp
-                hi = min(lo + 1024, len(pdf))
-                dots = _fp_dots_f64(V[lo:hi, None, :], C[None, :, :])
-                cos = dots / (np.sqrt(vn[lo:hi, None]) * np.sqrt(cn[None, :]))
-                cells[lo:hi] = cids[np.argmax(cos, axis=1)].astype("int32")
+            _, cells, _ = _pair_topk(pdf["vec_id"].to_numpy(), V, cids, C, 1)
             out = pdf.copy()
-            out["cell"] = cells
+            out["cell"] = cells.astype("int32")
             yield out
 
     # spread: the driver's single-row-group parquet yields ~1 input

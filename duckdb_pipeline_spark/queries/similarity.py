@@ -403,13 +403,16 @@ def similarity_ivf_adc_topk(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    from ..operators.similarity import SCALE as _SC
-    from ..operators.similarity import _ivf_centroids_and_query
+    from ..operators.similarity import (
+        _fp_dots_f64,
+        _ivf_centroids_and_query,
+        _rank_desc,
+    )
 
     n_cells, n_probe = 8, 2
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     idx_path = _ensure_ivf_index(spark, sf_dir, n_cells=n_cells)
-    C, qv = _ivf_centroids_and_query(emb, 0, n_cells, "vec_id", "embedding")
+    C, (qv,) = _ivf_centroids_and_query(emb, [0], n_cells, "vec_id", "embedding")
     empty = emb.select(
         "vec_id",
         F.lit(0).alias("cell"),
@@ -417,8 +420,7 @@ def similarity_ivf_adc_topk(spark, sf_dir):
     ).where(F.lit(False))
     if qv is None:
         return empty
-    qs = np.floor(qv[None, :] * C * _SC).astype("int64").sum(axis=1)
-    probe = [int(c) for c in np.lexsort((np.arange(len(qs)), -qs))[:n_probe]]
+    probe = _rank_desc(_fp_dots_f64(qv, C), n_probe).tolist()
 
     dim = len(qv)
     srow = emb.agg(
@@ -444,17 +446,9 @@ def similarity_ivf_adc_topk(spark, sf_dir):
     qcode = code(qv[None, :])[0]
 
     def score(batches):
-        empty_pdf = pd.DataFrame(
-            {
-                "vec_id": pd.Series([], dtype="int64"),
-                "cell": pd.Series([], dtype="int32"),
-                "adc_dist": pd.Series([], dtype="int64"),
-            }
-        )
         for pdf in batches:
             pdf = pdf[pdf["vec_id"] != 0].dropna(subset=["embedding"])
             if not len(pdf):
-                yield empty_pdf
                 continue
             V = np.stack(pdf["embedding"].to_numpy()).astype("float64")
             d = code(V) - qcode[None, :]
@@ -572,12 +566,6 @@ def similarity_adc_topk_np(spark, sf_dir):
         for pdf in batches:
             pdf = pdf.dropna(subset=["embedding"])
             if not len(pdf):
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pd.Series([], dtype="int64"),
-                        "adc_dist": pd.Series([], dtype="int64"),
-                    }
-                )
                 continue
             V = np.stack(pdf["embedding"].to_numpy()).astype("float64")
             d = code(V) - qcode[None, :]
@@ -1908,11 +1896,10 @@ def similarity_ivf_pq_topk(spark, sf_dir):
     trade FAISS calls IVFADC. Plan: two bounded driver collects
     (centroids + K*d codebook partials), then ONE partition-pruned
     map-only scan and TakeOrdered — no corpus shuffle at any scale."""
-    import numpy as np
-
-    from ..operators.similarity import SCALE as _SC
     from ..operators.similarity import (
+        _fp_dots_f64,
         _ivf_centroids_and_query,
+        _rank_desc,
         pq_adc_distances,
         pq_train_partials,
     )
@@ -1920,14 +1907,13 @@ def similarity_ivf_pq_topk(spark, sf_dir):
     n_cells, n_probe = 8, 2
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     idx_path = _ensure_ivf_index(spark, sf_dir, n_cells=n_cells)
-    C, qv = _ivf_centroids_and_query(emb, 0, n_cells, "vec_id", "embedding")
+    C, (qv,) = _ivf_centroids_and_query(emb, [0], n_cells, "vec_id", "embedding")
     empty = emb.select(
         "vec_id", F.lit(0).cast("long").alias("adc_dist")
     ).where(F.lit(False))
     if qv is None:
         return empty
-    qs = np.floor(qv[None, :] * C * _SC).astype("int64").sum(axis=1)
-    probe = [int(c) for c in np.lexsort((np.arange(len(qs)), -qs))[:n_probe]]
+    probe = _rank_desc(_fp_dots_f64(qv, C), n_probe).tolist()
 
     CB = _pq_seed_codebooks(emb)
     rows = (
@@ -2321,7 +2307,7 @@ def _ensure_ivfpq_index(spark, sf_dir: str) -> str:
             .collect()
         )
         CB1 = _pq_apply_update(CB, rows)
-        C, _ = _ivf_centroids_and_query(emb, 0, 8, "vec_id", "embedding")
+        C, _ = _ivf_centroids_and_query(emb, [], 8, "vec_id", "embedding")
         coded = _ivfpq_encode(emb, CB1, C)
         coded.write.mode("overwrite").partitionBy("cell").parquet(staging)
         with open(os.path.join(staging, "_CODEBOOKS.json"), "w") as fh:
@@ -2334,15 +2320,16 @@ def _ensure_ivfpq_index(spark, sf_dir: str) -> str:
 
 
 def _ivfpq_encode(emb, CB1, C):
-    """Shared IVF-PQ encoding kernel: cell = argmax fixed-point dot
-    score (ties to the lower cell id), codes = per-subspace exact-int
-    argmin — the same arithmetic at build time and append time, so an
-    appended vector gets byte-identical rows to a full rebuild under
-    the same frozen codebooks/centroids."""
+    """Shared IVF-PQ encoding kernel: cell = the top fixed-point
+    inner-product cell (operators.similarity ranking rule), codes =
+    per-subspace exact-int argmin — the same arithmetic at build time
+    and append time, so an appended vector gets byte-identical rows to
+    a full rebuild under the same frozen codebooks/centroids."""
     import numpy as np
     import pandas as pd
 
     from ..operators.similarity import SCALE as _SC
+    from ..operators.similarity import _fp_dots_f64, _fp_matrix, _rank_desc
 
     CB1 = np.asarray(CB1, dtype="float64")
     C = np.asarray(C, dtype="float64")
@@ -2350,19 +2337,10 @@ def _ivfpq_encode(emb, CB1, C):
     def encode(batches):
         m_sub, k, ds = CB1.shape
         for pdf in batches:
-            pdf = pdf.dropna(subset=["embedding"])
+            pdf, V = _fp_matrix(pdf, "embedding")
             if not len(pdf):
                 continue
-            V = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            cells = (
-                np.floor(V[:, None, :] * C[None, :, :] * float(_SC))
-                .astype("int64")
-                .sum(axis=2)
-            )
-            # argmax score, ties to the lower cell id (lexsort idiom)
-            order_cells = np.lexsort(
-                (np.tile(np.arange(len(C)), (len(V), 1)), -cells), axis=1
-            )[:, 0]
+            cells = _rank_desc(_fp_dots_f64(V[:, None, :], C), 1)[:, 0]
             codes = np.zeros((len(V), m_sub), dtype="int32")
             for m in range(m_sub):
                 Wm = V[:, m * ds : (m + 1) * ds]
@@ -2377,7 +2355,7 @@ def _ivfpq_encode(emb, CB1, C):
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
-                    "cell": order_cells.astype("int32"),
+                    "cell": cells.astype("int32"),
                     "codes": list(codes),
                 }
             )
@@ -2492,11 +2470,15 @@ def similarity_ivf_pq_topk_indexed(spark, sf_dir):
     import numpy as np
 
     from ..operators.similarity import SCALE as _SC
-    from ..operators.similarity import _ivf_centroids_and_query
+    from ..operators.similarity import (
+        _fp_dots_f64,
+        _ivf_centroids_and_query,
+        _rank_desc,
+    )
 
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     idx_path = _ensure_ivfpq_index(spark, sf_dir)
-    C, qv = _ivf_centroids_and_query(emb, 0, 8, "vec_id", "embedding")
+    C, (qv,) = _ivf_centroids_and_query(emb, [0], 8, "vec_id", "embedding")
     empty = emb.select(
         "vec_id", F.lit(0).cast("long").alias("adc_dist")
     ).where(F.lit(False))
@@ -2505,8 +2487,7 @@ def similarity_ivf_pq_topk_indexed(spark, sf_dir):
     with open(os.path.join(idx_path, "_CODEBOOKS.json")) as fh:
         CB1 = np.asarray(json.load(fh), dtype="float64")
     m_sub, k, ds = CB1.shape
-    qs = np.floor(qv[None, :] * C * _SC).astype("int64").sum(axis=1)
-    probe = [int(c) for c in np.lexsort((np.arange(len(qs)), -qs))[:2]]
+    probe = _rank_desc(_fp_dots_f64(qv, C), 2).tolist()
     lut = np.zeros((m_sub, k), dtype="int64")
     for m in range(m_sub):
         qm = qv[m * ds : (m + 1) * ds]

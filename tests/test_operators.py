@@ -627,3 +627,46 @@ def test_graph_triangles_closed_and_complete(spark, sf_dir):
     }
     assert tri == expected
     assert all(a < b < c for a, b, c in tri)
+
+
+def test_ivf_inmap_and_pruned_reject_sparse_centroid_ids(spark, sf_dir, tmp_path):
+    """Both IVF top-k paths fetch centroids through the shared dense-id
+    check: with vec_id 3 missing the cell numbering would shift, so both
+    raise instead of answering."""
+    import pytest
+
+    from duckdb_pipeline_spark.operators.similarity import (
+        ivf_topk_pruned,
+        ivf_topk_vectorized,
+    )
+
+    sparse = _emb(spark, sf_dir).where(F.col("vec_id") != 3)
+    with pytest.raises(ValueError, match="dense 0..7"):
+        ivf_topk_vectorized(sparse, query_id=0, k=10, n_cells=8, n_probe=2)
+    with pytest.raises(ValueError, match="dense 0..7"):
+        ivf_topk_pruned(
+            spark, str(tmp_path / "unused"), sparse, query_id=0, k=10,
+            n_cells=8, n_probe=2,
+        )
+
+
+def test_ivf_write_index_rejects_out_of_envelope_vectors(spark, tmp_path):
+    """A vector past d * SCALE * max|x|^2 < 2^53 would make the float64
+    dot sums inexact: the index build raises, whether the vector is a
+    centroid (driver-side fetch) or an ordinary row (in the batch map)."""
+    import pytest
+
+    from duckdb_pipeline_spark.operators.similarity import ivf_write_index
+
+    rows = [(i, [float(i % 5) / 10.0, 0.25, -0.5, 0.125]) for i in range(40)]
+
+    def emb(bad_id):
+        data = [(i, [2000.0, 0.0, 0.0, 0.0] if i == bad_id else v) for i, v in rows]
+        return spark.createDataFrame(data, "vec_id long, embedding array<float>")
+
+    with pytest.raises(ValueError, match="envelope exceeded"):
+        ivf_write_index(emb(2), str(tmp_path / "a"), n_cells=4)
+    with pytest.raises(Exception, match="envelope exceeded"):
+        ivf_write_index(emb(30), str(tmp_path / "b"), n_cells=4)
+    ivf_write_index(emb(-1), str(tmp_path / "ok"), n_cells=4)
+    assert spark.read.parquet(str(tmp_path / "ok")).count() == 40
